@@ -3,8 +3,8 @@
 ``queries()`` exposes one entry per implemented operator from SURVEY.md §2
 plus the LLM-data-pipeline extensions; ``oracle_sql()`` gives the equivalent
 DuckDB SQL over the same parquet tables. Engine-DSL entries run through the
-full MultiDb pipeline (validation → ACL → planner → resolver → DataFrame
-builder); operator entries call the operators package directly.
+full MultiDb pipeline (validation → ACL → planner → resolver → one Spark
+SQL statement); operator entries call the operators package directly.
 
 Numeric convention: money aggregates are computed over DECIMAL(12,4)-cast
 columns on BOTH sides (exact, associative — immune to partition-order float

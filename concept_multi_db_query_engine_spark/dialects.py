@@ -7,7 +7,8 @@ shared clause skeleton in :mod:`sqlgen`. Each dialect is a thin subclass —
 exactly the structure the reference prescribes ("Each engine gets a
 ``SqlDialect`` implementation", SQL_DIALECTS.md:59, ~200-300 lines each).
 
-These dialects render **text + params only** (``executeMode: 'sql-only'``).
+These dialects render **text + params only** (``executeMode: 'sql-only'``);
+column masking stays meta-only intent in their text, as in the reference.
 Execution always happens in Spark — the engine's honest dialect for executed
 queries is ``'spark'`` unless a registered database declares a foreign
 ``engine``, in which case sql-only text targets that engine's syntax so a
@@ -57,7 +58,16 @@ def _ch_infer(value: Any) -> str:
     return "String"
 
 
-class PostgresRenderer(SqlRenderer):
+class _TextOnlyRenderer(SqlRenderer):
+    """Base of the foreign dialects: their text is handed to another engine,
+    so masked columns render raw and the masking intent travels in
+    ``meta.columns[].masked``."""
+
+    def _mask(self, ref: str, fn: str, col_type: str) -> str:
+        return ref
+
+
+class PostgresRenderer(_TextOnlyRenderer):
     """Postgres dialect: ``"ident"`` quoting, ``$N`` placeholders, ILIKE,
     array-operator syntax (``= ANY``/``@>``/``&&``), correlated counted
     subqueries with a LIMIT short-circuit for ``>=``/``>``
@@ -132,7 +142,7 @@ class PostgresRenderer(SqlRenderer):
                 f"{op} {self._p(ep.count_value, 'int')}")
 
 
-class ClickHouseRenderer(SqlRenderer):
+class ClickHouseRenderer(_TextOnlyRenderer):
     """ClickHouse dialect: backtick quoting, ``{pN:Type}`` named typed
     parameters, function-style string/array operators
     (``ilike()``/``startsWith()``/``has()``/``empty()``), decorrelated
@@ -225,7 +235,7 @@ class ClickHouseRenderer(SqlRenderer):
         return _decorrelated_counted(self, ep)
 
 
-class TrinoRenderer(SqlRenderer):
+class TrinoRenderer(_TextOnlyRenderer):
     """Trino dialect: ``"ident"`` quoting, ``?`` placeholders with inline
     expansion for IN lists, ``lower() LIKE lower()`` case-folding, ARRAY[]
     constructors, decorrelated counted subqueries, and catalog-qualified
@@ -237,7 +247,8 @@ class TrinoRenderer(SqlRenderer):
         return '"' + name.replace('"', '""') + '"'
 
     def _p(self, value: Any, col_type: str | None = None) -> str:
-        ph = super()._p(value, col_type)
+        self.params.append(value)
+        ph = "?"
         if (col_type or "").removesuffix("[]") == "timestamp":
             # the reference's Trino form for timestamp params
             # (CROSS_DB_NORMALIZATION.md §2, C133 note): an untyped ? with

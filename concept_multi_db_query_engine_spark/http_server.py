@@ -58,6 +58,9 @@ def _json_default(value: Any) -> Any:
 
 class _Handler(BaseHTTPRequestHandler):
     engine: MultiDb  # set by make_server
+    # keep-alive: a client may send many requests over one connection;
+    # every reply carries Content-Length, which HTTP/1.1 framing needs
+    protocol_version = "HTTP/1.1"
 
     # silence default stderr access logging
     def log_message(self, *args: Any) -> None:  # noqa: D102
@@ -87,6 +90,9 @@ class _Handler(BaseHTTPRequestHandler):
         try:
             body = self._read_json()
         except (json.JSONDecodeError, ValueError) as exc:
+            # the body may be unread (bad Content-Length): the connection
+            # cannot frame a next request
+            self.close_connection = True
             self._send(400, {"code": "INVALID_JSON", "message": str(exc)})
             return
         try:

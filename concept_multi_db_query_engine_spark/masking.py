@@ -2,7 +2,8 @@
 
 Two equivalent implementations, tested against each other:
 
-- ``mask_column``: Spark Column expressions. The reference masks post-fetch
+- ``mask_sql``: a Spark SQL expression over a column reference, rendered
+  into the executed query's projection. The reference masks post-fetch
   (fine for collect()-sized results); at 100 TB posture masking must run
   distributed inside the plan so raw values never reach the driver.
 - ``mask_value``: plain-Python, used for the cache fast-path (rows served
@@ -18,55 +19,42 @@ import datetime
 import decimal
 from typing import Any
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
 MASKING_FNS = ("email", "phone", "name", "uuid", "number", "date", "full")
 
 
-def mask_column(col: Column, fn: str, col_type: str) -> Column:
-    """Masked Column expression; NULL passthrough is automatic for the string
-    builders (concat of NULL → NULL) and explicit elsewhere."""
+def mask_sql(ref: str, fn: str, col_type: str) -> str:
+    """Masked Spark SQL expression over the column reference ``ref``. Every
+    literal here is a constant of this module, never a caller value."""
     if fn == "email":
         # john@example.com → j***@***.com
-        masked = F.concat(
-            F.substring(col, 1, 1),
-            F.lit("***@***."),
-            F.substring_index(col, ".", -1),
-        )
+        masked = (f"concat(substring({ref}, 1, 1), '***@***.', "
+                  f"substring_index({ref}, '.', -1))")
     elif fn == "phone":
         # +1234567890 → +1***890 (country code + last 3)
-        masked = F.concat(
-            F.substring(col, 1, 2), F.lit("***"), F.substring(col, -3, 3)
-        )
+        masked = f"concat(substring({ref}, 1, 2), '***', substring({ref}, -3, 3))"
     elif fn == "name":
         # John Smith → J********h (first + last char)
-        masked = F.concat(
-            F.substring(col, 1, 1),
-            F.repeat(F.lit("*"), F.greatest(F.length(col) - 2, F.lit(1))),
-            F.substring(col, -1, 1),
-        )
+        masked = (f"concat(substring({ref}, 1, 1), "
+                  f"repeat('*', greatest(length({ref}) - 2, 1)), "
+                  f"substring({ref}, -1, 1))")
     elif fn == "uuid":
         # a1b2c3d4-... → a1b2****
-        masked = F.concat(F.substring(col, 1, 4), F.lit("****"))
+        masked = f"concat(substring({ref}, 1, 4), '****')"
     elif fn == "number":
-        masked = F.lit(0).cast("double") if col_type == "float" else F.lit(0).cast(
-            "decimal(38,10)" if col_type == "decimal" else "long"
-        )
+        zero = {"float": "DOUBLE", "decimal": "DECIMAL(38,10)"}.get(
+            col_type, "BIGINT")
+        masked = f"CAST(0 AS {zero})"
     elif fn == "date":
         # truncate to year: 2025-03-15 → 2025-01-01
-        masked = (
-            F.date_trunc("year", col)
-            if col_type == "timestamp"
-            else F.trunc(col, "year")
-        )
+        masked = (f"date_trunc('year', {ref})" if col_type == "timestamp"
+                  else f"trunc({ref}, 'year')")
     else:  # 'full' — safe default
-        masked = F.lit("***")
-    return F.when(col.isNull(), F.lit(None)).otherwise(masked)
+        masked = "'***'"
+    return f"CASE WHEN {ref} IS NULL THEN NULL ELSE {masked} END"
 
 
 def mask_value(value: Any, fn: str, col_type: str) -> Any:
-    """Python-side masking (cache fast-path) — must agree with mask_column."""
+    """Python-side masking (cache fast-path) — must agree with mask_sql."""
     if value is None:
         return None
     if fn == "email":
@@ -82,7 +70,7 @@ def mask_value(value: Any, fn: str, col_type: str) -> Any:
         return f"{str(value)[:4]}****"
     if fn == "number":
         # type-matched zero so cache-served and Spark-served rows are
-        # byte-identical: mask_column casts to double/decimal(38,10)/long
+        # byte-identical: mask_sql casts to double/decimal(38,10)/bigint
         if col_type == "float":
             return 0.0
         if col_type == "decimal":

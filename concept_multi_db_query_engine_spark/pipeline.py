@@ -1,8 +1,9 @@
 """Pipeline orchestration — the engine's only query entry point.
 
 Stage order mirrors the reference (README.md:36-82): snapshot → validation →
-access control → planning → name resolution → build (SQL generation analog)
-→ execution → result mapping. Each stage appends a DebugLogEntry when
+access control → planning → name resolution → SQL generation (one Spark SQL
+statement over the registry's views, values bound by name) → execution →
+result mapping. Each stage appends a DebugLogEntry when
 ``debug: true`` (QUERY.md:185-191); meta carries strategy/tables/columns/
 timing (QUERY.md:161-183).
 
@@ -21,7 +22,6 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 
 from .access import EffectiveAccess, resolve_access
-from .builder import DataFrameBuilder
 from .cache import CacheProvider, build_key
 from .config_validation import validate_config
 from .errors import (
@@ -49,6 +49,7 @@ from .query_validation import QueryValidator
 from .resolver import Resolver
 from .sources import Source, SourceRegistry
 from .dialects import renderer_for
+from .sqlgen import SqlRenderer, named_args
 
 
 class MultiDb:
@@ -82,7 +83,6 @@ class MultiDb:
             sources if isinstance(sources, SourceRegistry) else SourceRegistry(sources)
         )
         self.caches = caches or {}
-        self._builder = DataFrameBuilder(spark, self.registry)
         self._timeout_ms = timeout_ms
         self._closed = False
 
@@ -207,6 +207,7 @@ class MultiDb:
         self._closed = True
         for cache in self.caches.values():
             cache.close()
+        self.registry.drop_views(self.spark)
         self.registry.close()
 
     # -- queries -----------------------------------------------------------------
@@ -287,11 +288,12 @@ class MultiDb:
             return result
 
         if mode == "count":
-            gen_ms = (time.perf_counter() - t_gen) * 1000
-            t_exec = time.perf_counter()
             try:
+                counted = self._compile(plan)
+                gen_ms = (time.perf_counter() - t_gen) * 1000
+                t_exec = time.perf_counter()
                 count = self._run_with_timeout(
-                    lambda: self._builder.build_count(plan)
+                    lambda: counted.collect()[0][0]
                 )
             except ExecutionError:
                 raise
@@ -313,9 +315,9 @@ class MultiDb:
             return result
 
         # execute / dataframe
-        df = self._builder.build(plan)
+        df = self._compile(plan)
         gen_ms = (time.perf_counter() - t_gen) * 1000
-        entry("sql-generation", "dataframe plan built")
+        entry("sql-generation", "spark sql statement analysed")
         if mode == "dataframe":
             meta["timing"] = {"planningMs": planning_ms, "generationMs": gen_ms}
             return {"kind": "dataframe", "dataframe": df, "meta": meta}
@@ -332,7 +334,7 @@ class MultiDb:
                     [ErrorItem(QUERY_FAILED, str(exc))],
                 ) from exc
         # avg results are typed 'decimal' (QUERY.md:173, contract C302/C1104).
-        # The DataFrame computes them as double (exact decimal partial sums,
+        # The SQL computes them as double (exact decimal partial sums,
         # one double division — deterministic across partitionings); surface
         # them as Decimal in the row API to honor the declared type.
         avg_aliases = [a.alias for a in plan.aggregations if a.fn == "avg"]
@@ -352,6 +354,13 @@ class MultiDb:
         if debug:
             result["debugLog"] = log
         return result
+
+    def _compile(self, plan: ResolvedPlan) -> DataFrame:
+        """The plan as one Spark SQL statement over the registry's views,
+        with every value bound by name."""
+        with self.registry.views(self.spark) as relation:
+            sql, params = SqlRenderer(relations=relation).render(plan)
+            return self.spark.sql(sql, args=named_args(params))
 
     def dataframe(
         self, definition: dict[str, Any], context: dict[str, Any] | None = None

@@ -1,8 +1,8 @@
 """Resolved-plan IR — the analog of the reference's ``SqlParts``
 (SQL_DIALECTS.md:93-247): physical names only, dialect-agnostic filter trees.
 
-The DataFrame builder consumes this IR; the Spark-SQL text renderer (sql-only
-mode) renders the same IR, so the two can never drift.
+``sqlgen``/``dialects`` render it to SQL text: the spark dialect is what the
+engine executes, the others are ``sql-only`` output for foreign engines.
 """
 
 from __future__ import annotations
@@ -73,7 +73,6 @@ class ExistsPlan:
     negated: bool = False  # exists: false
     count_op: str | None = None  # when set, counted variant
     count_value: int | None = None
-    flag_name: str = ""  # internal boolean column the builder materializes
 
 
 FilterTree = Union[ValueFilter, ColumnFilter, HavingFilter, GroupNode, ExistsPlan]
@@ -160,19 +159,3 @@ class ResolvedPlan:
     distinct: bool = False
     mode: Literal["execute", "sql-only", "count", "dataframe"] = "execute"
     tables_used: list[TableUsed] = field(default_factory=list)
-    # all ExistsPlan nodes anywhere in `where`, in discovery order — the
-    # builder materializes one boolean flag column per entry before filtering
-    exists_flags: list[ExistsPlan] = field(default_factory=list)
-
-
-def walk_exists(tree: FilterTree | None, out: list[ExistsPlan]) -> None:
-    """Collect ExistsPlan nodes in discovery order (top level only — nested
-    EXISTS inside an ExistsPlan's own `where` are compiled recursively by the
-    builder when it builds that child)."""
-    if tree is None:
-        return
-    if isinstance(tree, ExistsPlan):
-        out.append(tree)
-    elif isinstance(tree, GroupNode):
-        for c in tree.conditions:
-            walk_exists(c, out)

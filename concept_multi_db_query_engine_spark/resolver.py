@@ -26,7 +26,6 @@ from .plans import (
     ResolvedPlan,
     SelectItem,
     ValueFilter,
-    walk_exists,
 )
 from .query_validation import agg_result_type
 
@@ -52,7 +51,6 @@ class Resolver:
         self.access = access
         self.routes = routes or {}
         self._counter = 0
-        self._flag_counter = 0
 
     def _route(self, table: TableMeta) -> TableRoute:
         r = self.routes.get(table.id)
@@ -151,7 +149,6 @@ class Resolver:
                 conditions.append(self._condition(f, jt, aliases))
         if conditions:
             plan.where = GroupNode("and", conditions)
-            walk_exists(plan.where, plan.exists_flags)
 
         # aggregations
         aggregations = defn.get("aggregations") or []
@@ -418,8 +415,6 @@ class Resolver:
             self._condition(c, et, inner_aliases) for c in f.get("filters") or []
         ]
         count = f.get("count")
-        flag = f"__exists_{self._flag_counter}"
-        self._flag_counter += 1
         return ExistsPlan(
             alias=alias,
             table_id=et.id,
@@ -433,7 +428,6 @@ class Resolver:
             negated=not f.get("exists", True) and count is None,
             count_op=count["operator"] if count else None,
             count_value=count["value"] if count else None,
-            flag_name=flag,
         )
 
     # -- having -----------------------------------------------------------------

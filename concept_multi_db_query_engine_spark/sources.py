@@ -5,11 +5,22 @@ The reference delegates execution to Postgres/ClickHouse/Trino executors
 Spark is both executor and federation layer. Sources return *lazy* DataFrames
 — Catalyst sees the full plan (scan + filters + joins) and pushes
 predicates/column pruning into the file scan.
+
+Queries read tables through engine-private temp views
+(``SourceRegistry.views``): a view is registered once per (database,
+physical table, source version) and read by every later query's SQL text,
+so a query no longer rebuilds and re-analyses each table's DataFrame. A
+source that reports no version gets a fresh view for each query.
 """
 
 from __future__ import annotations
 
-from typing import Any, Callable
+import itertools
+import re
+import threading
+import uuid
+from contextlib import contextmanager
+from typing import Any, Callable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -108,6 +119,12 @@ class Source:
     def df(self, spark: SparkSession, physical_name: str) -> DataFrame:
         raise NotImplementedError
 
+    def version(self, physical_name: str) -> Any:
+        """A value that changes whenever ``df(physical_name)`` would read
+        different data or schema, or None when the source cannot tell. A
+        view over the table is reused while the version compares equal."""
+        return None
+
     def ping(self) -> bool:
         return True
 
@@ -133,12 +150,21 @@ class ParquetSource(Source):
         # optional per-table normalization (e.g. nano-timestamp conversion)
         self.post = post
 
-    def df(self, spark: SparkSession, physical_name: str) -> DataFrame:
+    def _path(self, physical_name: str) -> str:
         stem = self.aliases.get(physical_name, physical_name)
-        df = read_parquet(spark, f"{self.directory}/{stem}.parquet")
+        return f"{self.directory}/{stem}.parquet"
+
+    def df(self, spark: SparkSession, physical_name: str) -> DataFrame:
+        df = read_parquet(spark, self._path(physical_name))
         # post sees the REQUESTED name (not the aliased stem) so derived
         # views (e.g. doc_terms over documents) can attach their projection
         return self.post(physical_name, df) if self.post else df
+
+    def version(self, physical_name: str) -> Any:
+        # the file listing a view captured is stale once the files change;
+        # the fingerprint changes with any rewrite, anywhere in the tree
+        fp = _path_fingerprint(self._path(physical_name))
+        return None if fp == ("no-memo",) else fp
 
     def ping(self) -> bool:
         import os
@@ -364,14 +390,27 @@ class MemorySource(Source):
         t = self.tables[physical_name]
         return t() if callable(t) else t
 
+    def version(self, physical_name: str) -> Any:
+        # a held DataFrame is its own version (it compares by identity); a
+        # factory may build something new on every call
+        t = self.tables.get(physical_name)
+        return None if t is None or callable(t) else t
+
 
 class SourceRegistry:
-    """database id → Source. The planner routes tables here; the builder
-    fetches DataFrames through it."""
+    """database id → Source. The planner routes tables here; queries read
+    them through the registry's views."""
 
     def __init__(self, sources: dict[str, Source] | None = None):
         self.sources: dict[str, Source] = dict(sources or {})
         self._closed = False
+        # view names are private to this registry: several engines can share
+        # one session, and callers register their own temp views
+        self._prefix = f"_mdb_{uuid.uuid4().hex[:12]}"
+        self._names = itertools.count()
+        self._lock = threading.Lock()
+        # (database id, physical name) -> (source, version, view name)
+        self._views: dict[tuple[str, str], tuple[Source, Any, str]] = {}
 
     def register(self, database_id: str, source: Source) -> None:
         self.sources[database_id] = source
@@ -379,7 +418,7 @@ class SourceRegistry:
     def has(self, database_id: str) -> bool:
         return database_id in self.sources
 
-    def df(self, spark: SparkSession, database_id: str, physical_name: str) -> DataFrame:
+    def _source(self, database_id: str) -> Source:
         if self._closed:
             raise ConnectionError(
                 "registry closed",
@@ -391,7 +430,54 @@ class SourceRegistry:
                 f"no source registered for database '{database_id}'",
                 [ErrorItem(EXECUTOR_MISSING, f"database '{database_id}' has no source")],
             )
-        return src.df(spark, physical_name)
+        return src
+
+    def df(self, spark: SparkSession, database_id: str, physical_name: str) -> DataFrame:
+        return self._source(database_id).df(spark, physical_name)
+
+    def _view_name(self, database_id: str, physical_name: str) -> str:
+        safe = re.sub(r"[^A-Za-z0-9_]", "_", f"{database_id}_{physical_name}")
+        return f"{self._prefix}_{next(self._names)}_{safe}"
+
+    @contextmanager
+    def views(self, spark: SparkSession) -> Iterator[Callable[[str, str], str]]:
+        """Yield ``relation(database_id, physical_name) -> view name`` for one
+        query's SQL text. A table whose source reports a version keeps one
+        view, replaced when the version changes; other tables get a view for
+        this query only, dropped on exit (run ``spark.sql`` inside the
+        block: it analyses the text, and the plan then holds the view's
+        relation)."""
+        transient: list[str] = []
+
+        def relation(database_id: str, physical_name: str) -> str:
+            src = self._source(database_id)
+            version = src.version(physical_name)
+            if version is None:
+                name = self._view_name(database_id, physical_name)
+                src.df(spark, physical_name).createOrReplaceTempView(name)
+                transient.append(name)
+                return name
+            key = (database_id, physical_name)
+            with self._lock:
+                held = self._views.get(key)
+                if held is not None and held[0] is src and held[1] == version:
+                    return held[2]
+                name = held[2] if held else self._view_name(*key)
+                src.df(spark, physical_name).createOrReplaceTempView(name)
+                self._views[key] = (src, version, name)
+                return name
+
+        try:
+            yield relation
+        finally:
+            for name in transient:
+                spark.catalog.dropTempView(name)
+
+    def drop_views(self, spark: SparkSession) -> None:
+        with self._lock:
+            for _, _, name in self._views.values():
+                spark.catalog.dropTempView(name)
+            self._views.clear()
 
     def ping_all(self) -> dict[str, bool]:
         return {db: s.ping() for db, s in self.sources.items()}

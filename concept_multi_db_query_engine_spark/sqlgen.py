@@ -1,4 +1,4 @@
-"""SQL text renderers for ``executeMode: 'sql-only'``.
+"""SQL text renderers: the engine's query compiler.
 
 The reference generates Postgres/ClickHouse/Trino SQL from one
 dialect-agnostic ``SqlParts`` IR (SQL_DIALECTS.md:61-260, ~200-300 lines per
@@ -6,19 +6,29 @@ dialect). This module is the same architecture over our ``ResolvedPlan`` IR:
 ``SqlRenderer`` is both the **spark** dialect and the shared skeleton —
 clause assembly is common; every spot where the reference's dialect table
 (SQL_DIALECTS.md:5-28) differs is a small hook the pg/ch/trino subclasses in
-``dialects.py`` override. Rendered from the SAME ResolvedPlan the DataFrame
-builder consumes, so text and execution cannot drift.
+``dialects.py`` override.
 
-Spark dialect conventions: values are emitted as ``?`` placeholders with an
-ordered params list (Trino-style, SQL_DIALECTS.md:9-10); identifiers are
+The spark dialect is what the engine executes: ``MultiDb.query`` renders
+every ``execute``/``dataframe``/``count`` plan to one statement over the
+registry's engine-private views (``relations``) and runs it with
+``spark.sql(text, args=named_args(params))``. ``executeMode: 'sql-only'``
+returns the same text over physical table names. Masking and count mode are
+part of the text, so what a caller reads is what runs.
+
+Spark dialect conventions: values are emitted as named markers ``:p0``,
+``:p1``, … with ``params[N]`` the value of ``:pN``; identifiers are
 backtick-quoted with embedded backticks doubled (injection layer 2,
-SECURITY.md:27-45).
+SECURITY.md:27-45). Bind the markers by name (``named_args``). Positional
+``?`` markers are unsafe on Spark 4.1: after a ``BETWEEN`` they can bind to
+the wrong values without an error (``p BETWEEN ? AND ? AND k IN (?, ?) AND
+p > ?`` returned no rows where the named form returns the right ones).
 """
 
 from __future__ import annotations
 
-from typing import Any
+from typing import Any, Callable
 
+from .masking import mask_sql
 from .plans import (
     ColumnFilter,
     ExistsPlan,
@@ -26,6 +36,7 @@ from .plans import (
     GroupNode,
     HavingFilter,
     ResolvedPlan,
+    SelectItem,
     ValueFilter,
 )
 
@@ -34,16 +45,29 @@ def quote_ident(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
 
 
+def named_args(params: list[Any]) -> dict[str, Any]:
+    """``spark.sql`` ``args`` for spark-dialect text: ``:pN`` binds
+    ``params[N]``."""
+    return {f"p{i}": v for i, v in enumerate(params)}
+
+
 class SqlRenderer:
     """Spark dialect + shared clause skeleton for all dialects."""
 
     dialect = "spark"
 
-    def __init__(self, catalogs: dict[str, str] | None = None) -> None:
+    def __init__(
+        self,
+        catalogs: dict[str, str] | None = None,
+        relations: Callable[[str, str], str] | None = None,
+    ) -> None:
         self.params: list[Any] = []
         # database id -> catalog qualifier (used by the Trino dialect for
         # P3 catalog qualification, SQL_DIALECTS.md:203-207)
         self.catalogs = catalogs or {}
+        # (database id, physical name) -> the relation name the text reads;
+        # unset, the text reads the physical name (sql-only output)
+        self.relations = relations
 
     # ------------------------------------------------------------------
     # dialect hooks (spark defaults; overridden in dialects.py)
@@ -55,16 +79,20 @@ class SqlRenderer:
     def _p(self, value: Any, col_type: str | None = None) -> str:
         """Register one parameter, return its placeholder."""
         self.params.append(value)
-        return "?"
+        return f":p{len(self.params) - 1}"
 
     def _table(self, physical: str, database: str) -> str:
         """Quoted table reference (dotted names quoted per segment; the
         Trino dialect prepends the catalog)."""
+        if self.relations is not None:
+            return self.quote(self.relations(database, physical))
         return ".".join(self.quote(p) for p in physical.split("."))
 
+    def _mask(self, ref: str, fn: str, col_type: str) -> str:
+        return mask_sql(ref, fn, col_type)
+
     def _ne(self, ref: str, value: Any, col_type: str | None) -> str:
-        # null-inclusive !=, matching the builder's eqNullSafe negation
-        # (contract C107, CONTRACT_TESTS.md:465)
+        # null-inclusive != (contract C107, CONTRACT_TESTS.md:465)
         return f"{ref} IS DISTINCT FROM {self._p(value, col_type)}"
 
     def _in(self, ref: str, values: list, negated: bool,
@@ -118,9 +146,9 @@ class SqlRenderer:
         return f"size({ref}) > 0" if negated else f"size({ref}) = 0"
 
     def _avg(self, col_sql: str) -> str:
-        # the spark dialect mirrors the builder's decimal-avg convention
-        # (QUERY.md:173: avg types as decimal) so sql-only text and the
-        # executed plan agree numerically; other dialects emit plain AVG
+        # decimal partial sums are exact and associative, so the result does
+        # not depend on partitioning (QUERY.md:173: avg types as decimal);
+        # other dialects emit plain AVG
         return (f"CAST(SUM(CAST({col_sql} AS DECIMAL(28,10))) AS DOUBLE)"
                 f" / COUNT({col_sql})")
 
@@ -140,29 +168,29 @@ class SqlRenderer:
 
     def render(self, plan: ResolvedPlan) -> tuple[str, list[Any]]:
         parts: list[str] = []
-        if plan.mode == "count":
+        count_distinct = (plan.mode == "count" and plan.distinct
+                          and bool(plan.select_items))
+        if count_distinct:
+            # contract C1713: distinct + explicit columns counts distinct
+            # raw value tuples (masking never applies to a count)
+            select = "SELECT DISTINCT " + ", ".join(
+                self._col(s.table_alias, s.physical)
+                + f" AS {self.quote(s.out_name)}" for s in plan.select_items)
+        elif plan.mode == "count":
             select = f"SELECT COUNT(*) AS {self.quote('count')}"
         else:
-            cols: list[str] = []
-            if plan.aggregations:
-                for s in plan.select_items:
-                    cols.append(self._col(s.table_alias, s.physical)
-                                + f" AS {self.quote(s.out_name)}")
-                for a in plan.aggregations:
-                    if a.physical is None:
-                        cols.append(f"COUNT(*) AS {self.quote(a.alias)}")
-                    elif a.fn == "avg":
-                        c = self._col(a.table_alias, a.physical)
-                        cols.append(f"{self._avg(c)} AS {self.quote(a.alias)}")
-                    else:
-                        cols.append(
-                            f"{a.fn.upper()}({self._col(a.table_alias, a.physical)})"
-                            f" AS {self.quote(a.alias)}"
-                        )
-            else:
-                for s in plan.select_items:
-                    cols.append(self._col(s.table_alias, s.physical)
-                                + f" AS {self.quote(s.out_name)}")
+            cols = [self._select_col(s) for s in plan.select_items]
+            for a in plan.aggregations:
+                if a.physical is None:
+                    cols.append(f"COUNT(*) AS {self.quote(a.alias)}")
+                elif a.fn == "avg":
+                    c = self._col(a.table_alias, a.physical)
+                    cols.append(f"{self._avg(c)} AS {self.quote(a.alias)}")
+                else:
+                    cols.append(
+                        f"{a.fn.upper()}({self._col(a.table_alias, a.physical)})"
+                        f" AS {self.quote(a.alias)}"
+                    )
             distinct = "DISTINCT " if plan.distinct and not plan.aggregations else ""
             select = f"SELECT {distinct}" + ", ".join(cols)
         parts.append(select)
@@ -184,8 +212,7 @@ class SqlRenderer:
                 parts.append(f"WHERE {w}")
         if plan.mode != "count":
             # GROUP BY renders whenever grouping keys exist — also with NO
-            # aggregations, where it de-duplicates the keys exactly like the
-            # builder's groupBy().agg() with an empty agg list (QUERY.md:40-43)
+            # aggregations, where it de-duplicates the keys (QUERY.md:40-43)
             if plan.group_by:
                 seen: set[str] = set()
                 gb = []
@@ -204,22 +231,36 @@ class SqlRenderer:
                     parts.append(f"HAVING {h}")
             if plan.order_by:
                 obs = []
+                # a grouped query orders by a masked key's raw values, as
+                # filters do: masking applies to the output values only
+                raw = {s.out_name: self._col(s.table_alias, s.physical)
+                       for s in plan.select_items
+                       if s.masked and plan.aggregations}
                 for o in plan.order_by:
-                    ref = (
-                        self.quote(o.agg_alias)
-                        if o.agg_alias is not None
-                        else self._col(*o.column_expr.split(".", 1))
-                    )
+                    if o.agg_alias is None:
+                        ref = self._col(*o.column_expr.split(".", 1))
+                    else:
+                        ref = raw.get(o.agg_alias) or self.quote(o.agg_alias)
                     obs.append(f"{ref} {o.direction.upper()}")
                 parts.append("ORDER BY " + ", ".join(obs))
             if plan.limit is not None:
                 parts.append(f"LIMIT {int(plan.limit)}")
             if plan.offset:
                 parts.append(f"OFFSET {int(plan.offset)}")
-        return "\n".join(parts), self.params
+        sql = "\n".join(parts)
+        if count_distinct:
+            sql = (f"SELECT COUNT(*) AS {self.quote('count')} FROM (\n{sql}\n)"
+                   " AS d")
+        return sql, self.params
 
     def _col(self, alias: str, physical: str) -> str:
         return f"{alias}.{self.quote(physical)}"
+
+    def _select_col(self, s: SelectItem) -> str:
+        ref = self._col(s.table_alias, s.physical)
+        if s.masked:
+            ref = self._mask(ref, s.masking_fn or "full", s.col_type)
+        return f"{ref} AS {self.quote(s.out_name)}"
 
     def _tree(self, node: FilterTree) -> str:
         if isinstance(node, GroupNode):
@@ -326,7 +367,5 @@ class SqlRenderer:
 
 def escape_like(text: str) -> str:
     """Escape live LIKE wildcards in user text for contains/startsWith/
-    endsWith patterns (SECURITY.md:83-88). The DataFrame path uses literal
-    Contains/StartsWith/EndsWith expressions and needs no escaping; this is
-    for the rendered SQL text only."""
+    endsWith patterns (SECURITY.md:83-88)."""
     return text.replace("\\", "\\\\").replace("%", "\\%").replace("_", "\\_")

@@ -210,7 +210,11 @@ ROLES = [
 ]
 
 
-def build_engine(spark: SparkSession, sf_dir: str) -> MultiDb:
+def build_engine(
+    spark: SparkSession, sf_dir: str, timeout_ms: int | None = None
+) -> MultiDb:
+    """The two-database engine over ``sf_dir``; ``timeout_ms`` is the
+    per-query deadline (``MultiDb``'s ``timeout_ms``)."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     registry = SourceRegistry(
         {
@@ -227,5 +231,6 @@ def build_engine(spark: SparkSession, sf_dir: str) -> MultiDb:
         }
     )
     return MultiDb(
-        spark, METADATA, ROLES, registry, strict_api_names=False
+        spark, METADATA, ROLES, registry, strict_api_names=False,
+        timeout_ms=timeout_ms,
     )

@@ -167,7 +167,10 @@ def _resolved_plan(engine, defn):
 def _check_placeholders(dialect, sql, params):
     import re
 
-    if dialect in ("spark", "trino"):
+    if dialect == "spark":
+        ns = sorted(int(m) for m in re.findall(r":p(\d+)\b", sql))
+        assert ns == list(range(len(params))), (sql, params)
+    elif dialect == "trino":
         assert sql.count("?") == len(params), sql
     elif dialect == "postgres":
         ns = sorted({int(m) for m in re.findall(r"\$(\d+)", sql)})

@@ -1,6 +1,6 @@
 """Execution parity for the ClickHouse dialect: the rendered CH SQL +
 params RUN on DuckDB — after a *mechanical* syntax translation — and
-return exactly the rows the DataFrame builder path returns.
+return exactly the rows the engine's executed path returns.
 
 DuckDB obviously isn't ClickHouse, so two purely-syntactic rewrites bridge
 the wire format without touching semantics: ``{pN:Type}`` named params
@@ -120,7 +120,7 @@ def _assert_parity(engine, duck, defn, context=ADMIN):
         tuple(_canon_val(r[c]) for c in cols) for r in data
     )
     assert via_ch == via_builder, (
-        f"ch-dialect execution diverges from builder\n"
+        f"ch-dialect execution diverges from the executed path\n"
         f"CH SQL: {sql_res['sql']}\ntranslated: {translated}\n"
         f"params: {sql_res['params']}"
     )
@@ -238,8 +238,8 @@ BATTERY = [
                   "filters": [{"column": "status", "operator": "=",
                                "value": "shipped"}]}]},
     # EXISTS inside an OR group (C603): the SQL form renders a correlated
-    # EXISTS branch inside the OR tree, while the DataFrame path uses the
-    # flag-join form — executed parity proves the two agree in this
+    # EXISTS branch inside the OR tree, which Spark decorrelates into an
+    # existence join — executed parity proves the two agree in this
     # dialect too (round-6; previously proven only for the pg renderer)
     {"from": "samples", "columns": ["id"],
      "filters": [{"logic": "or", "conditions": [
@@ -273,10 +273,10 @@ def test_battery_is_not_vacuous(ch_engine, duck):
 
 def test_masked_sql_only_intent_reproduces_builder_masking(ch_engine, duck):
     """sql-only masking contract, executed in the CH dialect (round-6):
-    masking is never rendered into SQL text (the reference masks
+    masking is never rendered into foreign-dialect SQL text (the reference masks
     post-query); instead the meta reports per-column masking intent, and a
     consumer applying ``mask_value`` to the executed rows must land on
-    EXACTLY what the DataFrame path returns with the same context."""
+    EXACTLY what the executed path returns with the same context."""
     from concept_multi_db_query_engine_spark.masking import mask_value
 
     ctx = {"roles": {"user": ["tenant-user"]}}
@@ -316,7 +316,7 @@ def test_masked_sql_only_intent_reproduces_builder_masking(ch_engine, duck):
 
 # ---------------------------------------------------------------------------
 # Property-based EXECUTED parity over the driver testdata: random valid
-# definitions through the DataFrame builder vs the translated ClickHouse
+# definitions through the executed path vs the translated ClickHouse
 # SQL on DuckDB — the CH twin of the pg/trino random-DSL fuzzes.
 # ---------------------------------------------------------------------------
 

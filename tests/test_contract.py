@@ -150,9 +150,9 @@ class TestSqlOnlyMode:
             ADMIN,
         )
         assert len(res["params"]) >= 1
-        # placeholder style is dialect-specific: trino/spark '?', pg '$1',
-        # clickhouse '{p1:Type}' (SQL_DIALECTS.md:8)
-        assert any(x in res["sql"] for x in ("?", "$1", "{p1"))
+        # placeholder style is dialect-specific: trino '?', spark ':p0',
+        # pg '$1', clickhouse '{p1:Type}' (SQL_DIALECTS.md:8)
+        assert any(x in res["sql"] for x in ("?", ":p0", "$1", "{p1"))
 
     def test_c015_sql_only_masking_reported(self, engine):
         res = run(

@@ -2,7 +2,7 @@
 actually RUN on a Postgres-compatible engine (DuckDB speaks the relevant pg
 surface: ``$N`` numbered parameters, ``= ANY($1::text[])`` / ``<> ALL``,
 ``ILIKE``, ``IS DISTINCT FROM``, ``@>``/``&&`` array operators,
-``levenshtein``) and return exactly the rows the DataFrame builder path
+``levenshtein``) and return exactly the rows the engine's executed path
 returns over the same fixture data.
 
 This is a stronger check than the golden-SQL shapes in test_dialects.py:
@@ -90,7 +90,7 @@ def _assert_parity(engine, duck, defn, context=ADMIN):
         tuple(_canon_val(r[c]) for c in cols) for r in data
     )
     assert via_pg == via_builder, (
-        f"pg-dialect execution diverges from builder\nSQL: {sql_res['sql']}"
+        f"pg-dialect execution diverges from the executed path\nSQL: {sql_res['sql']}"
         f"\nparams: {sql_res['params']}"
     )
     return via_pg
@@ -212,7 +212,7 @@ def test_battery_is_not_vacuous(engine, duck):
 # ---------------------------------------------------------------------------
 # Full engine-DSL sweep through the Postgres renderer, executed on DuckDB
 # against the real testdata — every gate DSL query's pg SQL must return the
-# builder's rows.
+# executed path's rows.
 # ---------------------------------------------------------------------------
 
 import copy
@@ -309,7 +309,7 @@ def test_dsl_pg_sql_executes_on_duckdb(pg_testdata_engine, duck_testdata,
 
 # ---------------------------------------------------------------------------
 # Property-based EXECUTED parity: random valid definitions must return the
-# same rows through the DataFrame builder and through the rendered pg SQL
+# same rows through the executed path and through the rendered pg SQL
 # executed on DuckDB. Stronger than the fixed battery — hypothesis explores
 # operator/group/join/agg combinations nobody hand-picked.
 # ---------------------------------------------------------------------------

@@ -166,3 +166,39 @@ def test_query_sql_only_reports_engine_dialect(spark):
         assert body["params"] == ["active"]
     finally:
         srv.shutdown()
+
+
+def test_keep_alive_serves_several_requests_on_one_connection(server):
+    """HTTP/1.1: two queries and a 404 over one connection, each reply
+    framed by its Content-Length, all from the same client port."""
+    import http.client
+    from urllib.parse import urlsplit
+
+    port = urlsplit(server).port
+    conn = http.client.HTTPConnection("127.0.0.1", port, timeout=60)
+    try:
+        replies, ports = [], set()
+        for path, payload in [
+            ("/query", {"definition": {"from": "region",
+                                       "executeMode": "count"}}),
+            ("/nope", {}),
+            ("/query", {"definition": {
+                "from": "nation", "columns": ["n_nationkey"],
+                "orderBy": [{"column": "n_nationkey", "direction": "asc"}],
+                "limit": 2}}),
+        ]:
+            conn.request("POST", path, json.dumps(payload).encode(),
+                         {"Content-Type": "application/json"})
+            ports.add(conn.sock.getsockname()[1])
+            resp = conn.getresponse()
+            assert resp.version == 11
+            body = resp.read()
+            assert int(resp.getheader("Content-Length")) == len(body)
+            replies.append((resp.status, json.loads(body)))
+    finally:
+        conn.close()
+    assert len(ports) == 1
+    assert replies[0][0] == 200 and replies[0][1]["count"] == 5
+    assert replies[1][0] == 404 and replies[1][1]["code"] == "NOT_FOUND"
+    assert replies[2][0] == 200
+    assert [r["n_nationkey"] for r in replies[2][1]["data"]] == [0, 1]

@@ -1,7 +1,7 @@
 """Physical-plan shape assertions — the PLANS.md claims as regression tests:
 filters reach the parquet scan, projections prune the read schema, dimension
 joins broadcast, counted EXISTS decorrelates, window top-k gets a partial
-group-limit, and the DSL builder stays inside whole-stage codegen (no Python
+group-limit, and a DSL query stays inside whole-stage codegen (no Python
 in the row path)."""
 
 from __future__ import annotations

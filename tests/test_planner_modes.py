@@ -133,6 +133,7 @@ class TestPlannerStrategies:
         import copy
 
         from concept_multi_db_query_engine_spark import MultiDb
+        from concept_multi_db_query_engine_spark.sqlgen import named_args
         from tests.fixtures import METADATA, ROLES, build_registry
 
         meta = copy.deepcopy(METADATA)
@@ -177,7 +178,8 @@ class TestExecuteModes:
 
     def test_sql_only_runs_on_spark(self, spark):
         """The SPARK dialect's rendered text is valid Spark SQL: execute it
-        and compare against the builder path. (The contract-fixture engine
+        with its values bound by name and compare against the executed
+        path. (The contract-fixture engine
         now renders pg/ch/trino per declared engine — tests/test_dialects.py
         — so this uses a spark-engine twin of the same metadata; the
         testdata engine's 31-query sweep in test_sqlonly_sweep.py is the
@@ -185,6 +187,7 @@ class TestExecuteModes:
         import copy
 
         from concept_multi_db_query_engine_spark import MultiDb
+        from concept_multi_db_query_engine_spark.sqlgen import named_args
         from tests.fixtures import METADATA, ROLES, build_registry
 
         meta = copy.deepcopy(METADATA)
@@ -198,14 +201,10 @@ class TestExecuteModes:
         }
         res = run(spark_engine, {**defn, "executeMode": "sql-only"})
         assert res["meta"]["dialect"] == "spark"
-        sql = res["sql"]
-        for p in res["params"]:
-            lit = f"'{p}'" if isinstance(p, str) else str(p)
-            sql = sql.replace("?", lit, 1)
         reg = build_registry(spark)
         reg.df(spark, "pg-main", "samples").createOrReplaceTempView("samples")
-        sql = sql.replace("FROM `samples`", "FROM samples")
-        rows = [r.asDict() for r in spark.sql(sql).collect()]
+        rows = [r.asDict() for r in spark.sql(
+            res["sql"], args=named_args(res["params"])).collect()]
         direct = run(spark_engine, defn)["data"]
         assert rows == direct
 

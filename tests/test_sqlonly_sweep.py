@@ -1,8 +1,10 @@
 """sql-only renderer sweep: for EVERY engine-DSL definition in the driver
-entry file, the rendered Spark SQL text (params substituted) executed via
-spark.sql over the same tables must return exactly the rows the DataFrame
-builder path returns. Renderer and builder share one ResolvedPlan; this
-proves the textual rendering itself doesn't drift either."""
+entry file, the rendered Spark SQL text, run by ``spark.sql`` with its values
+bound by name over temp views of the physical tables, must return exactly the
+rows the executed path returns. The executed path renders the same plan over
+the engine's private views, so this proves the text a caller receives is the
+query the engine runs — masking included. (The test name is kept from the
+DataFrame builder the text was first checked against.)"""
 
 from __future__ import annotations
 
@@ -10,32 +12,11 @@ import pytest
 
 import __spark_entry__ as entry_mod
 from concept_multi_db_query_engine_spark import testdata
+from concept_multi_db_query_engine_spark.sqlgen import named_args
 
 SF_DIR = "/root/testdata/sf0.001"
 
-# masking_role excluded: masking is applied post-query, not in the SQL text
-# (the reference behaves the same — masking intent is meta-only in sql mode)
-SWEEP = sorted(n for n in entry_mod._DSL if n != "masking_role")
-
-
-def _substitute(sql: str, params) -> str:
-    import datetime as dt
-
-    for p in params:
-        if isinstance(p, str):
-            lit = "'" + p.replace("'", "''") + "'"
-        elif isinstance(p, bool):
-            lit = "true" if p else "false"
-        elif p is None:
-            lit = "NULL"
-        elif isinstance(p, dt.datetime):
-            lit = f"TIMESTAMP '{p.isoformat(sep=' ')}'"
-        elif isinstance(p, dt.date):
-            lit = f"DATE '{p.isoformat()}'"
-        else:
-            lit = str(p)
-        sql = sql.replace("?", lit, 1)
-    return sql
+SWEEP = sorted(entry_mod._DSL)
 
 
 @pytest.fixture(scope="module")
@@ -60,6 +41,7 @@ def env(spark):
 def test_rendered_sql_matches_builder(name, spark, env):
     engine = env
     defn = entry_mod._DSL[name]
+    context = entry_mod._DSL_CONTEXT.get(name)
     import decimal
 
     def canon(v):
@@ -67,12 +49,13 @@ def test_rendered_sql_matches_builder(name, spark, env):
         # returns double; collapse both to float for the drift comparison
         return float(v) if isinstance(v, decimal.Decimal) else v
 
-    res = engine.query({**defn, "executeMode": "sql-only"})
-    sql = _substitute(res["sql"], res["params"])
-    via_sql = [tuple(canon(v) for v in r) for r in spark.sql(sql).collect()]
-    via_builder = [
-        tuple(canon(v) for v in r.values()) for r in engine.query(defn)["data"]
+    res = engine.query({**defn, "executeMode": "sql-only"}, context)
+    sql = res["sql"]
+    via_sql = [tuple(canon(v) for v in r)
+               for r in spark.sql(sql, args=named_args(res["params"])).collect()]
+    via_engine = [
+        tuple(canon(v) for v in r.values()) for r in engine.query(defn, context)["data"]
     ]
-    assert sorted(map(repr, via_sql)) == sorted(map(repr, via_builder)), (
-        f"{name}: sql-text path diverges from builder path\nSQL: {sql}"
+    assert sorted(map(repr, via_sql)) == sorted(map(repr, via_engine)), (
+        f"{name}: sql-only text diverges from the executed path\nSQL: {sql}"
     )

@@ -64,3 +64,23 @@ def test_fast_query_unaffected_by_timeout(spark):
         "from": "region", "columns": ["r_regionkey", "r_name"],
     })
     assert len(result["data"]) == 5
+
+
+def test_build_engine_timeout_runs_query_under_timeout_tag(spark, monkeypatch):
+    """``testdata.build_engine(timeout_ms=...)`` gives the engine the
+    deadline path: its query's Spark jobs carry an ``mdb-timeout-*`` tag."""
+    engine = testdata.build_engine(spark, SF_DIR, timeout_ms=60_000)
+    sc = spark.sparkContext
+    tags: list[str] = []
+    add = sc.addJobTag
+
+    def record(tag):
+        tags.append(tag)
+        add(tag)
+
+    monkeypatch.setattr(sc, "addJobTag", record)
+    result = engine.query({"from": "nation", "columns": ["n_nationkey"]})
+    assert len(result["data"]) == 25
+    assert len(tags) == 1 and tags[0].startswith("mdb-timeout-")
+    tracker = sc._jsc.sc().statusTracker()
+    assert len(tracker.getJobIdsForTag(tags[0])) >= 1

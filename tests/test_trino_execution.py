@@ -1,5 +1,5 @@
 """Execution parity for the Trino dialect: the rendered Trino SQL + params
-actually RUN on DuckDB and return exactly the rows the DataFrame builder
+actually RUN on DuckDB and return exactly the rows the engine's executed
 path returns over the same fixture data.
 
 DuckDB natively speaks the Trino overlap the round-4 verdict called out —
@@ -117,7 +117,7 @@ def _assert_parity(engine, duck, defn, context=ADMIN):
         tuple(_canon_val(r[c]) for c in cols) for r in data
     )
     assert via_trino == via_builder, (
-        f"trino-dialect execution diverges from builder\n"
+        f"trino-dialect execution diverges from the executed path\n"
         f"SQL: {sql_res['sql']}\nparams: {sql_res['params']}"
     )
     return via_trino
@@ -247,8 +247,8 @@ BATTERY = [
                   "filters": [{"column": "status", "operator": "=",
                                "value": "shipped"}]}]},
     # EXISTS inside an OR group (C603): the SQL form renders a correlated
-    # EXISTS branch inside the OR tree, while the DataFrame path uses the
-    # flag-join form — executed parity proves the two agree in this
+    # EXISTS branch inside the OR tree, which Spark decorrelates into an
+    # existence join — executed parity proves the two agree in this
     # dialect too (round-6; previously proven only for the pg renderer)
     {"from": "samples", "columns": ["id"],
      "filters": [{"logic": "or", "conditions": [
@@ -283,10 +283,10 @@ def test_battery_is_not_vacuous(trino_engine, duck):
 def test_masked_sql_only_intent_reproduces_builder_masking(trino_engine,
                                                            duck):
     """sql-only masking contract, executed in the Trino dialect (round-6):
-    masking is never rendered into SQL text (the reference masks
+    masking is never rendered into foreign-dialect SQL text (the reference masks
     post-query); instead the meta reports per-column masking intent, and a
     consumer applying ``mask_value`` to the executed rows must land on
-    EXACTLY what the DataFrame path returns with the same context."""
+    EXACTLY what the executed path returns with the same context."""
     from concept_multi_db_query_engine_spark.masking import mask_value
 
     ctx = {"roles": {"user": ["tenant-user"]}}
@@ -379,7 +379,7 @@ def test_null_fk_does_not_poison_not_in(duck):
 
 # ---------------------------------------------------------------------------
 # Property-based EXECUTED parity over the driver testdata: random valid
-# definitions through the DataFrame builder vs the rendered Trino SQL on
+# definitions through the executed path vs the rendered Trino SQL on
 # DuckDB (catalog-qualified tables mirrored as a DuckDB schema). The Trino
 # twin of the pg fuzz in test_dialect_execution.py.
 # ---------------------------------------------------------------------------
