@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 # decimal(12,4) for money columns; the (1±x) unit factors are cast to the
 # narrower decimal(6,4) (lossless — discount/tax carry 4 decimals) so the
 # three-factor product (price × (1-disc) × (1+tax)) peaks at precision 28
@@ -510,8 +512,9 @@ def distributed_group_quantiles(
     contract requires (the rank-routing path ranks NULLs first as NaN
     while ``collect_list`` drops them — callers passing ``max_rows``
     must have null-filtered ``value_col``, which every wired call site
-    does).  With ``max_rows=None`` (default) or a bound above the
-    ceiling the corpus-scale plan is byte-for-byte unchanged.
+    does; a group holding a NULL fails the query).  With
+    ``max_rows=None`` (default) or a bound above the ceiling the
+    corpus-scale plan is byte-for-byte unchanged.
     """
     from pyspark.sql import types as T
 
@@ -525,9 +528,18 @@ def distributed_group_quantiles(
         picked = df.groupBy(group_col).agg(
             F.sort_array(
                 F.collect_list(F.col(value_col).cast("double"))
-            ).alias("__arr")
+            ).alias("__arr"),
+            F.count(F.lit(1)).alias("__n"),
+            F.count(value_col).alias("__n_value"),
         )
-        n_d = F.size("__arr").cast("double")
+        # every output reads n_d, so a NULL value fails the query loudly
+        # instead of being dropped by collect_list
+        n_d = F.when(
+            F.col("__n") == F.col("__n_value"), F.size("__arr")
+        ).otherwise(F.raise_error(F.lit(
+            f"distributed_group_quantiles: max_rows needs a NULL-free "
+            f"{value_col!r}"
+        ))).cast("double")
         outs = []
         for i, p in enumerate(probs):
             pos = F.lit(float(p)) * (n_d - 1)
@@ -1651,7 +1663,8 @@ def markov_removal_attribution(
         out.append((c, pf, pr, effect_micro))
     total_eff = sum(e for _, _, _, e in out)
     spark = events.sparkSession
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (
                 c,

@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 _Q = 1_000_000  # micro-unit quantization scale
 
 
@@ -597,7 +599,8 @@ def feature_auc_report(
             "* CAST(n1 AS DOUBLE), 0.0d), 6)"
         ).alias("auc"),
     ).withColumn("abs_signal", F.expr("round(abs(auc - 0.5d), 6)"))
-    names_df = df.sparkSession.createDataFrame(
+    names_df = local_frame(
+        df.sparkSession,
         [(i, nm) for i, nm in enumerate(names)],
         "__fi INT, feature STRING",
     )

@@ -422,14 +422,19 @@ def _pq_tables(
 
 def _pq_table_maps(
     queries: DataFrame, cents: DataFrame, q_in: str,
-    vec_col: str, dim: int, m: int,
+    vec_col: str, dim: int, m: int, k: int,
 ) -> DataFrame:
     """One row per query: the ADC distance table folded into a MAP
     keyed ``s·65536 + cid`` (every (s, cid) the codebook holds — a
     candidate's code is always a codebook cid, so lookups never miss).
     Lets scoring compute a candidate's full ADC sum INLINE from its
     m-code array instead of joining m exploded code rows against m·k
-    table rows and re-aggregating per (query, vector)."""
+    table rows and re-aggregating per (query, vector).  A codebook of
+    ``k >= 65536`` centroids would collide keys, so it raises."""
+    if k >= 65536:
+        raise ValueError(
+            f"PQ codebook size k={k} must be below 65536: the ADC table "
+            "keys pack subspace*65536 + centroid id")
     return _pq_tables(queries, cents, q_in, vec_col, dim, m) \
         .groupBy("qid").agg(
             F.map_from_entries(F.collect_list(F.struct(
@@ -556,7 +561,7 @@ def pq_topk(
         "vid",
         F.array(*[F.col(f"m{s}.cid") for s in range(m)]).alias("__codes"),
     )
-    tabs = _pq_table_maps(queries, cents, q_in, vec_col, dim, m)
+    tabs = _pq_table_maps(queries, cents, q_in, vec_col, dim, m, k)
     scored = codes.crossJoin(F.broadcast(tabs)).select(
         "qid", "vid", F.expr(_pq_adc_expr(m)).alias("adc_dist2"),
     )
@@ -760,7 +765,7 @@ def ivf_pq_topk(
         "vid",
         F.array(*[F.col(f"m{s}.cid") for s in range(m)]).alias("__codes"),
     )
-    tabs = _pq_table_maps(queries, cents, q_in, vec_col, dim, m)
+    tabs = _pq_table_maps(queries, cents, q_in, vec_col, dim, m, k)
     scored = (
         cands.join(codes, "vid")
         .join(F.broadcast(tabs), "qid")

@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 
 def _shingles(docs: DataFrame, k: int = 5, max_doc_freq: int | None = None
               ) -> DataFrame:
@@ -1073,7 +1075,8 @@ def lsh_tuning_curve(
         for b in range(1, num_hashes + 1)
         if num_hashes % b == 0
     ]
-    sims_df = spark.createDataFrame(
+    sims_df = local_frame(
+        spark,
         [(round(s, 4),) for s in sims], "similarity double"
     )
     out = None
@@ -1820,7 +1823,8 @@ def suffix_duplicate_stats(
         F.sum(F.when(F.col("lcp") >= int(site_min_words), 1)
               .otherwise(0)).cast("long").alias("sites"),
     )
-    extra_df = spark.createDataFrame(
+    extra_df = local_frame(
+        spark,
         [(s, 0, lcp, 1 if lcp >= int(site_min_words) else 0)
          for s, lcp, _w in extras],
         "src string, n_positions long, mx long, sites long",
@@ -1878,7 +1882,8 @@ def suffix_duplicate_passages(
         .alias("passage"),
         F.col("lcp").alias("dup_len_words"),
     )
-    extra_df = spark.createDataFrame(
+    extra_df = local_frame(
+        spark,
         [(s, " ".join(w), lcp) for s, lcp, w in extras
          if lcp >= int(min_words)],
         "src string, passage string, dup_len_words long",

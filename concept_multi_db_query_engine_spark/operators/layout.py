@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 
 def morton_expr(col_a: str, col_b: str, bits: int = 16) -> str:
     """SQL text interleaving the low ``bits`` bits of two non-negative
@@ -338,7 +340,8 @@ def pruning_report(
         F.count(F.lit(1)).cast("long").alias("cnt"),
     )
     spark = df.sparkSession
-    pdf = spark.createDataFrame(
+    pdf = local_frame(
+        spark,
         [(str(n), int(al), int(ah), int(bl), int(bh))
          for n, al, ah, bl, bh in probes],
         "probe string, alo long, ahi long, blo long, bhi long",

@@ -24,6 +24,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 try:  # real-codec path: env-gated, never a hard dependency
     from PIL import Image as _PILImage
 
@@ -201,7 +203,7 @@ def synthetic_png_table(spark, n: int) -> DataFrame:
     for i in range(n):
         w, h, _ = synthetic_png_params(i)
         rows.append((i, bytearray(synthetic_png(i)), w, h, "image/png"))
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
+    return local_frame(spark, rows, MEDIA_SCHEMA)
 
 
 def png_decode_expected(n: int) -> list[tuple]:
@@ -419,7 +421,7 @@ def synthetic_y4m_table(spark, n: int) -> DataFrame:
     for i in range(n):
         w, h, _, _ = synthetic_y4m_params(i)
         rows.append((i, bytearray(synthetic_y4m(i)), w, h, "video/y4m"))
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
+    return local_frame(spark, rows, MEDIA_SCHEMA)
 
 
 def y4m_decode_expected(n: int) -> list[tuple]:
@@ -561,7 +563,7 @@ def synthetic_wav_table(spark, n: int) -> DataFrame:
     rows = []
     for i in range(n):
         rows.append((i, bytearray(synthetic_wav(i)), 0, 0, "audio/wav"))
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
+    return local_frame(spark, rows, MEDIA_SCHEMA)
 
 
 def wav_decode_expected(n: int) -> list[tuple]:
@@ -695,7 +697,7 @@ def synthetic_bmp_table(spark, n: int) -> DataFrame:
     for i in range(n):
         w, h, _ = synthetic_bmp_params(i)
         rows.append((i, bytearray(synthetic_bmp(i)), w, h, "image/bmp"))
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
+    return local_frame(spark, rows, MEDIA_SCHEMA)
 
 
 def bmp_decode_expected(n: int) -> list[tuple]:

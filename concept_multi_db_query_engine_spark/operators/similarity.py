@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 _DOT = (
     "aggregate(zip_with(q.v, c.v, (x, y) -> CAST(x AS DOUBLE) * "
     "CAST(y AS DOUBLE)), CAST(0.0 AS DOUBLE), (acc, z) -> acc + z)"
@@ -2070,7 +2072,8 @@ def kcenter_diversity_sample(
             )
         picked.append((pick["vid"], [float(x) for x in pick["v"]],
                        float(pick["norm2"]), float(pick["mind"])))
-    out = embeddings.sparkSession.createDataFrame(
+    out = local_frame(
+        embeddings.sparkSession,
         [(int(p[0]), i + 1, p[3]) for i, p in enumerate(picked)],
         f"{id_col} long, sel_rank long, min_dist double",
     )

@@ -35,6 +35,8 @@ from itertools import combinations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 # Moment accumulators: DECIMAL(12,4) inputs (exact for the testdata's
 # money/quantity/ratio columns), DECIMAL(25,8) products -> Spark sums at
 # DECIMAL(35,8)/DuckDB DECIMAL(38,8), exact on both within precision 38.
@@ -507,7 +509,7 @@ def distributed_prefix_counts(
         + ([T.StructField("__next_part_v", T.DoubleType())]
            if with_lead else [])
     )
-    offsets_df = vals.sparkSession.createDataFrame(offs, schema)
+    offsets_df = local_frame(vals.sparkSession, offs, schema)
     w = (
         Window.partitionBy("__pid")
         .orderBy(*order_exprs)
@@ -612,7 +614,8 @@ def ks_test(
         df, value_col, group_col, group_a, group_b
     )
     if n_a == 0 or n_b == 0:
-        return df.sparkSession.createDataFrame(
+        return local_frame(
+            df.sparkSession,
             [(n_a, n_b)], "n_a long, n_b long"
         ).select(
             "n_a", "n_b",
@@ -733,7 +736,8 @@ def mann_whitney_u(
         df, value_col, group_col, group_a, group_b
     )
     if n_a == 0 or n_b == 0:
-        return df.sparkSession.createDataFrame(
+        return local_frame(
+            df.sparkSession,
             [(n_a, n_b)], "n_a long, n_b long"
         ).select(
             "n_a", "n_b",
@@ -2616,7 +2620,8 @@ def holt_forecast(
     for h in range(1, horizon + 1):
         f = lvl + h * trd
         out.append((h, f, f / 1e6))
-    return series.sparkSession.createDataFrame(
+    return local_frame(
+        series.sparkSession,
         out, "h int, forecast_micro long, forecast double"
     ).orderBy("h")
 
@@ -3197,7 +3202,8 @@ def cramer_von_mises(
         df, value_col, group_col, group_a, group_b
     )
     if n_a == 0 or n_b == 0:
-        return df.sparkSession.createDataFrame(
+        return local_frame(
+            df.sparkSession,
             [(n_a, n_b)], "n_a long, n_b long"
         ).select(
             "n_a", "n_b",
@@ -3280,7 +3286,8 @@ def energy_distance(
     )
     n_a, n_b = totals["ca"], totals["cb"]
     if n_a == 0 or n_b == 0:
-        return df.sparkSession.createDataFrame(
+        return local_frame(
+            df.sparkSession,
             [(n_a, n_b)], "n_a long, n_b long"
         ).select(
             "n_a", "n_b",
@@ -3667,7 +3674,8 @@ def anderson_darling_2s(
         df, value_col, group_col, group_a, group_b
     )
     if n_a == 0 or n_b == 0:
-        return df.sparkSession.createDataFrame(
+        return local_frame(
+            df.sparkSession,
             [(n_a, n_b)], "n_a long, n_b long"
         ).select(
             "n_a", "n_b",
@@ -4502,7 +4510,8 @@ def mmd_rff(
     ).collect()[0]
     n = mom["n"]
     if n < 2:
-        return df.sparkSession.createDataFrame(
+        return local_frame(
+            df.sparkSession,
             [(0, 0)], "n_a long, n_b long"
         ).select(
             "n_a", "n_b",
@@ -5000,7 +5009,8 @@ def welch_anova(
     row = s1.collect()[0]
     n_tot, k = int(row["n"] or 0), int(row["k"] or 0)
     if k < 2 or not row["w_p"]:
-        return df.sparkSession.createDataFrame(
+        return local_frame(
+            df.sparkSession,
             [(n_tot, k)], "n long, k long"
         ).select(
             "n", "k",
@@ -7938,7 +7948,8 @@ def bradley_terry(
             (groups[i], n_by_g[i], wins,
              (wins / comps) if comps > 0.0 else None, p[i])
         )
-    out = df.sparkSession.createDataFrame(
+    out = local_frame(
+        df.sparkSession,
         rows,
         "grp string, n long, wins double, win_rate double, "
         "bt_strength double",
@@ -8067,7 +8078,8 @@ def elo_preference_ratings(
         played[b["g"]] += 1
         wins2[a["g"]] += s2
         wins2[b["g"]] += 2 - s2
-    out = df.sparkSession.createDataFrame(
+    out = local_frame(
+        df.sparkSession,
         [(g, played[g], wins2[g], r[g]) for g in groups],
         "grp string, n_played long, wins2 long, r_micro long",
     )

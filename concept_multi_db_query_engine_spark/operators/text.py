@@ -16,6 +16,8 @@ import math
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from ..session import local_frame
+
 # tiny English stopword set used by the heuristics (shared with the oracle)
 STOPWORDS = ("the", "a", "is", "of", "and")
 
@@ -363,7 +365,8 @@ def weighted_sample(
     if sum(ppm.values()) > 1_000_000:
         raise ValueError("weights must sum to <= 1")
     spark = docs.sparkSession
-    wdf = spark.createDataFrame(
+    wdf = local_frame(
+        spark,
         list(ppm.items()), f"{group_col} string, w_ppm long"
     )
     mass = (F.count(F.lit(1)) if weight_col is None
@@ -394,7 +397,8 @@ def weighted_sample(
             math.floor(need / n * float(1 << _SPLIT_BITS))
         )
         thresholds.append((g, th))
-    thr = spark.createDataFrame(
+    thr = local_frame(
+        spark,
         thresholds, f"{group_col} string, __thr long"
     )
     h = F.conv(
@@ -1990,7 +1994,8 @@ def bpe_train_merges(
             {r["w"]: int(r["cnt"]) for r in counts.collect()}, n_merges
         )
         bpe_train_merges.last_rounds = 0
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             merges,
             "rank int, lhs string, rhs string, merged string, "
             "weighted_count long",
@@ -2075,7 +2080,8 @@ def bpe_train_merges(
     # diagnostics for tests/benchmarks: how many Spark rounds the
     # batched learner actually needed for this merge table
     bpe_train_merges.last_rounds = rounds
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         merges,
         "rank int, lhs string, rhs string, merged string, "
         "weighted_count long",
@@ -2865,7 +2871,8 @@ def vocab_coverage(
     ranked = head.select(
         "cnt", F.row_number().over(w_rank).alias("__r")
     )
-    spine = docs.sparkSession.createDataFrame(
+    spine = local_frame(
+        docs.sparkSession,
         [(int(k),) for k in ks], "k long"
     )
     return (
@@ -3925,7 +3932,8 @@ def doremi_mixture_weights(
         w = [_r6(m[i] / s) for i in range(len(names))]
         acc = [_r6(acc[i] + w[i]) for i in range(len(names))]
     wbar = [_r6(acc[i] / float(iterations)) for i in range(len(names))]
-    out = docs.sparkSession.createDataFrame(
+    out = local_frame(
+        docs.sparkSession,
         [
             (rw["d"], rw["n_docs"], rw["tokens"], rw["ce_micro"],
              rw["ex_micro"], wbar[i])

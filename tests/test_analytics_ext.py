@@ -293,6 +293,26 @@ def test_distributed_quantiles_high_cardinality_groups(spark):
         assert r["q0"] == float(r["grp"][1:]), r
 
 
+def test_distributed_quantiles_max_rows_path_rejects_nulls(spark):
+    """The max_rows fast path's contract is a NULL-free value column: a
+    group holding a NULL fails the query instead of dropping the value."""
+    import pytest as _pytest
+
+    from concept_multi_db_query_engine_spark import operators as ops
+
+    rows = [("a", 1.0), ("a", 3.0), ("b", 2.0)]
+    df = spark.createDataFrame(rows, "grp string, v double")
+    got = ops.distributed_group_quantiles(
+        df, "grp", "v", [0.5], max_rows=3).collect()
+    assert sorted((r["grp"], r["q0"]) for r in got) == [
+        ("a", 2.0), ("b", 2.0)]
+    with_null = spark.createDataFrame(rows + [("b", None)],
+                                      "grp string, v double")
+    with _pytest.raises(Exception, match="NULL-free"):
+        ops.distributed_group_quantiles(
+            with_null, "grp", "v", [0.5], max_rows=4).collect()
+
+
 def test_hourly_anomaly_zero_fills_hour_gaps(spark):
     """Round-5 (round-4 advisory): the trailing baseline runs over the
     clock-hour grid, not only observed hours — silent hours appear as n=0

@@ -202,3 +202,66 @@ def test_keep_alive_serves_several_requests_on_one_connection(server):
     assert replies[1][0] == 404 and replies[1][1]["code"] == "NOT_FOUND"
     assert replies[2][0] == 200
     assert [r["n_nationkey"] for r in replies[2][1]["data"]] == [0, 1]
+
+
+def test_client_disconnect_sends_nothing_more_and_logs_no_traceback():
+    """A client that leaves before its reply: the failed write is the last
+    one on that connection (no 500 on the dead socket), the server records
+    no error, and it goes on serving."""
+    import socket
+    import struct
+    import sys
+    import threading
+
+    started, left = threading.Event(), threading.Event()
+    done = threading.Event()
+    sends: list[int] = []
+
+    class _SlowEngine:
+        def query(self, definition, context=None):
+            started.set()
+            left.wait(10)
+            return {"kind": "count", "count": 1}
+
+        def health_check(self):
+            return {"status": "ok"}
+
+    srv = http_server.make_server(_SlowEngine())
+
+    class _Handler(srv.RequestHandlerClass):
+        def _send(self, status, payload):
+            sends.append(status)
+            super()._send(status, payload)
+
+        def finish(self):
+            super().finish()
+            done.set()
+
+    srv.RequestHandlerClass = _Handler
+    errors: list[BaseException] = []
+    srv.handle_error = lambda request, addr: errors.append(
+        sys.exc_info()[1])
+    threading.Thread(target=srv.serve_forever, daemon=True).start()
+    port = srv.server_address[1]
+    try:
+        body = json.dumps({"definition": {"from": "region"}}).encode()
+        sock = socket.create_connection(("127.0.0.1", port), timeout=10)
+        sock.sendall(
+            b"POST /query HTTP/1.1\r\nHost: x\r\n"
+            b"Content-Type: application/json\r\n"
+            b"Content-Length: " + str(len(body)).encode() + b"\r\n\r\n"
+            + body)
+        assert started.wait(10)
+        # close with a reset, so the server's write fails at once
+        sock.setsockopt(socket.SOL_SOCKET, socket.SO_LINGER,
+                        struct.pack("ii", 1, 0))
+        sock.close()
+        left.set()
+        assert done.wait(10)
+        assert sends == [200]
+        assert errors == []
+        assert _get(f"http://127.0.0.1:{port}", "/health") == (
+            200, {"status": "ok"})
+    finally:
+        srv.shutdown()
+        srv.server_close()

@@ -77,12 +77,32 @@ def _names(engine):
         {"from": "region", "columns": ["r_name"]})["data"])
 
 
+def _key_sums(engine):
+    return {r["r_name"]: r["keys"] for r in engine.query({
+        "from": "region", "groupBy": [{"column": "r_name"}],
+        "aggregations": [{"column": "r_regionkey", "fn": "sum",
+                          "alias": "keys"}]})["data"]}
+
+
+def _count(engine):
+    return engine.query({"from": "region", "executeMode": "count"})["count"]
+
+
 def test_parquet_rewrite_shows_in_next_query(spark, region_engine):
+    """Also for a grouped query and a count: collecting one DataFrame a
+    second time reuses its first run's shuffle files, so a plan reused
+    across a rewrite would answer with the old sums."""
     engine, path, reads = region_engine
-    assert _names(engine) == ["AFRICA", "AMERICA", "ASIA"]
-    _region_rows(spark, [(3, "EUROPE"), (4, "MIDDLE EAST")]) \
+    for _ in range(2):
+        assert _names(engine) == ["AFRICA", "AMERICA", "ASIA"]
+        assert _key_sums(engine) == {"AFRICA": 0, "AMERICA": 1, "ASIA": 2}
+        assert _count(engine) == 3
+    _region_rows(spark, [(3, "EUROPE"), (4, "ASIA"), (5, "ASIA"),
+                         (6, "OCEANIA")]) \
         .write.mode("overwrite").parquet(str(path / "region.parquet"))
-    assert _names(engine) == ["EUROPE", "MIDDLE EAST"]
+    assert _names(engine) == ["ASIA", "ASIA", "EUROPE", "OCEANIA"]
+    assert _key_sums(engine) == {"ASIA": 9, "EUROPE": 3, "OCEANIA": 6}
+    assert _count(engine) == 4
     assert reads == ["region", "region"]  # one view, re-registered once
 
 

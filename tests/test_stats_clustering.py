@@ -273,6 +273,14 @@ def test_pq_encode_rejects_indivisible_dim(spark):
         ops.pq_encode(_emb(spark, [[1.0, 2.0, 3.0]]), dim=3, m=2)
 
 
+def test_pq_topk_rejects_codebooks_that_overflow_the_table_key(spark):
+    # ADC table keys pack subspace*65536 + centroid id
+    emb = _emb(spark, [[0.0, 0.0, 1.0, 1.0], [2.0, 2.0, 3.0, 3.0]])
+    with pytest.raises(ValueError, match="65536"):
+        ops.pq_topk(emb, emb, dim=4, m=2, k=65536, iterations=1)
+    ops.pq_topk(emb, emb, dim=4, m=2, k=2, iterations=1).collect()
+
+
 def test_ols_by_group_independent_fits(spark):
     rows = [("g1", float(x), 2.0 * x + 1.0) for x in range(5)]
     rows += [("g2", float(x), -3.0 * x + 4.0) for x in range(5)]
