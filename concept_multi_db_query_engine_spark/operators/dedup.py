@@ -29,6 +29,12 @@ from pyspark.sql import functions as F
 
 from ..session import local_frame
 
+# ``prefix_filter_pairs`` collects the doc ids of each group of identical
+# token sets into one row and emits the group's c*(c-1)/2 within-group
+# pairs. A larger group fails the query instead of growing one row (and
+# the pair stream) without bound.
+MAX_DUPLICATE_GROUP = 10_000
+
 
 def _shingles(docs: DataFrame, k: int = 5, max_doc_freq: int | None = None
               ) -> DataFrame:
@@ -265,7 +271,12 @@ def prefix_filter_pairs(
         sets_by_doc.groupBy("__s")
         .agg(
             F.min("doc_id").alias("rep"),
-            F.collect_list("doc_id").alias("__members"),
+            F.when(F.count(F.lit(1)) <= MAX_DUPLICATE_GROUP,
+                   F.collect_list("doc_id"))
+            .otherwise(F.raise_error(F.lit(
+                f"prefix_filter_pairs: more than {MAX_DUPLICATE_GROUP} "
+                f"documents share one token set")))
+            .alias("__members"),
         )
         .localCheckpoint(eager=True)
     )

@@ -3,7 +3,8 @@
 Local mode here, but the configs are the ones that matter on a 1000-executor
 cluster too: AQE for runtime re-planning (skew joins, partition coalescing),
 UTC session time, Arrow for any pandas exchange, a generated-code cache
-that holds the library's working set, and a Python worker daemon whose tasks
+that holds the library's working set, a driver JIT policy that keeps C2
+for code that gets hot, and a Python worker daemon whose tasks
 skip a per-task re-read of ``pyspark.zip``. ``local_frame`` turns driver-side
 rows into a frame without starting Python tasks at all.
 """
@@ -25,6 +26,26 @@ from pyspark.sql import types as T
 # ended at 269 MB; with this cap, 5,639 + 225 and 237 MB.
 # Static conf: it takes effect only when the session is first created.
 CODEGEN_CACHE_ENTRIES = 8192
+
+# The driver JVM's C2 (tier-4) thresholds, 3x the HotSpot defaults. The JIT
+# held more than half of a warm operation's driver CPU (255-274 of about
+# 460 ms per benchmark operator row on a 4-vCPU VM), 82% of it in C2
+# compiling planner, closure-cleaning, serialization and py4j code that runs
+# a few thousand times per process and never pays the compile back. C1 keeps
+# its default schedule, and per-row generated code and scan loops still
+# reach the tripled counts within the first queries. Lukewarm code stays in
+# C1 longer, so a serial loop over the benchmark's rows at sf0.1 ran about
+# 7% slower over its first 75 passes (about 3 minutes) and at the same
+# speed from about pass 100.
+# The option is ``spark.driver.defaultJavaOptions``, which Spark puts before
+# the user's ``spark.driver.extraJavaOptions`` and ``--driver-java-options``:
+# a user's own flag wins. Driver only: on a cluster the executors keep the
+# defaults, since their CPU is per-row code that C2 pays back (in local mode
+# they share the driver's JVM). Applies when the driver JVM is started.
+DRIVER_JIT_OPTIONS = (
+    "-XX:Tier4InvocationThreshold=15000 -XX:Tier4MinInvocationThreshold=1800 "
+    "-XX:Tier4CompileThreshold=45000 -XX:Tier4BackEdgeThreshold=120000"
+)
 
 # Python workers fork from this daemon (see its docstring); they find the
 # package through PACKAGE_ROOT whatever the driver's working directory is.
@@ -53,6 +74,7 @@ def get_spark(
         .config("spark.python.daemon.module", PYTHON_DAEMON_MODULE)
         .config("spark.executorEnv.PYTHONPATH", PACKAGE_ROOT)
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
+        .config("spark.driver.defaultJavaOptions", DRIVER_JIT_OPTIONS)
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
     )

@@ -1799,6 +1799,21 @@ def test_prefix_filter_prunes_stop_token_pairs(spark):
     assert (1, 100) in got
 
 
+def test_prefix_filter_fails_on_a_duplicate_group_above_the_cap(
+        spark, monkeypatch):
+    from concept_multi_db_query_engine_spark.operators import dedup
+
+    docs = [(1, "a b"), (2, "b a"), (3, "a b a"), (4, "a c")]
+    df = spark.createDataFrame(docs, "doc_id int, text string")
+    monkeypatch.setattr(dedup, "MAX_DUPLICATE_GROUP", 3)
+    got = {(r["d1"], r["d2"]): r["jaccard"]
+           for r in ops.prefix_filter_pairs(df, threshold=0.3).collect()}
+    assert got == _brute_jaccard(docs, 0.3)
+    monkeypatch.setattr(dedup, "MAX_DUPLICATE_GROUP", 2)
+    with pytest.raises(Exception, match="more than 2 documents share"):
+        ops.prefix_filter_pairs(df, threshold=0.3).collect()
+
+
 def test_prefix_filter_threshold_validation(spark):
     df = spark.createDataFrame([(1, "a")], "doc_id int, text string")
     with pytest.raises(ValueError):
