@@ -517,14 +517,10 @@ def _lsh_candidates(
 def minhash_frames(
     docs: DataFrame, k: int = 5, num_hashes: int = 16,
 ) -> tuple[DataFrame, DataFrame]:
-    """The shared upstream of both minhash scoring modes: (shingles,
-    signatures). At corpus scale the signature stage dominates both
-    :func:`minhash_lsh_pairs` and :func:`minhash_estimate_pairs`; a caller
-    running more than one scoring mode over the same corpus should build
-    these frames once, ``persist()`` them, and pass them to each call via
-    ``frames=`` — paying the shingle scan and the signature shuffle once
-    instead of per mode. Nothing is persisted here; caching policy belongs
-    to the caller."""
+    """The shared upstream of the minhash scoring modes: (shingles,
+    signatures). At corpus scale the signature stage dominates
+    :func:`minhash_lsh_pairs` and :func:`minhash_estimate_pairs`. Nothing
+    is persisted here; caching policy belongs to the caller."""
     sh = _shingles(docs, k)
     return sh, _minhash_sigs(sh, num_hashes)
 
@@ -535,7 +531,6 @@ def minhash_estimate_pairs(
     num_hashes: int = 16,
     bands: int = 4,
     min_estimate: float = 0.5,
-    frames: tuple[DataFrame, DataFrame] | None = None,
 ) -> DataFrame:
     """LSH candidates scored by SIGNATURE AGREEMENT instead of exact
     Jaccard: est = (#matching minhash slots) / num_hashes, an unbiased
@@ -544,17 +539,11 @@ def minhash_estimate_pairs(
     shingle frame) is too expensive — per-pair work is O(num_hashes),
     independent of document length. num_hashes is a power of two, so the
     division is exact in binary and the estimate is bit-reproducible
-    cross-engine. Returns (d1, d2, est_jaccard ≥ min_estimate).
-
-    ``frames``: optionally inject precomputed (shingles, signatures) from
-    :func:`minhash_frames` to share the signature stage with other scoring
-    modes in the same session; defaults to computing them here."""
-    _, sigs = frames if frames is not None else minhash_frames(
-        docs, k, num_hashes)
-    if frames is None:
-        # PIN the self-computed signature frame (3 references below —
-        # the minhash_lsh_pairs discipline).
-        sigs = sigs.localCheckpoint(eager=False)
+    cross-engine. Returns (d1, d2, est_jaccard ≥ min_estimate)."""
+    # PIN the signature frame (3 references below — the
+    # minhash_lsh_pairs discipline).
+    sigs = minhash_frames(docs, k, num_hashes)[1].localCheckpoint(
+        eager=False)
     candidates = _lsh_candidates(sigs, num_hashes, bands)
     a = sigs.alias("a")
     b = sigs.alias("b")
@@ -577,7 +566,6 @@ def minhash_lsh_pairs(
     num_hashes: int = 16,
     bands: int = 4,
     threshold: float = 0.5,
-    frames: tuple[DataFrame, DataFrame] | None = None,
 ) -> DataFrame:
     """MinHash + banded LSH near-dup detection, verified with exact Jaccard.
 
@@ -588,21 +576,13 @@ def minhash_lsh_pairs(
     At scale this is the only shape that works: signatures are
     O(docs × num_hashes), buckets bound the join fan-out, and exact Jaccard
     runs only on candidates.
-
-    ``frames``: optionally inject precomputed (shingles, signatures) from
-    :func:`minhash_frames` to share the signature stage with other scoring
-    modes in the same session; defaults to computing them here.
     """
-    sh, sigs = frames if frames is not None else minhash_frames(
-        docs, k, num_hashes)
-    if frames is None:
-        # PIN the self-computed signature frame: it is referenced three
-        # times below (candidates + both size sides) and each un-pinned
-        # reference re-runs the shingle scan + 16 min-aggregates — the
-        # stage the docstring calls dominant. n_docs x ~20 longs, one
-        # lazy materialization. Injected frames keep the caller's own
-        # persistence policy untouched.
-        sigs = sigs.localCheckpoint(eager=False)
+    sh, sigs = minhash_frames(docs, k, num_hashes)
+    # PIN the signature frame: it is referenced three times below
+    # (candidates + both size sides) and each un-pinned reference re-runs
+    # the shingle scan + 16 min-aggregates — the stage the docstring calls
+    # dominant. n_docs x ~20 longs, one lazy materialization.
+    sigs = sigs.localCheckpoint(eager=False)
     candidates = _lsh_candidates(sigs, num_hashes, bands)
     # Exact-Jaccard verification on CANDIDATES ONLY — this is the whole point
     # of LSH. (Running the full inverted-index jaccard and intersecting with
@@ -1392,7 +1372,6 @@ def bbit_minhash_pairs(
     num_hashes: int = 16,
     bands: int = 4,
     b_bits: int = 8,
-    frames: tuple[DataFrame, DataFrame] | None = None,
 ) -> DataFrame:
     """b-bit minhash (Li & König 2010) scored next to the full-width
     estimate on the same LSH candidates: keep only the low ``b_bits``
@@ -1419,12 +1398,10 @@ def bbit_minhash_pairs(
     if b_bits % 4 != 0 or not 4 <= b_bits <= 48:
         raise ValueError("b_bits must be a multiple of 4 in [4, 48]")
     b_mod = 1 << b_bits
-    _, sigs = frames if frames is not None else minhash_frames(
-        docs, k, num_hashes)
-    if frames is None:
-        # PIN the self-computed signature frame (3 references below —
-        # the minhash_lsh_pairs discipline).
-        sigs = sigs.localCheckpoint(eager=False)
+    # PIN the signature frame (3 references below — the
+    # minhash_lsh_pairs discipline).
+    sigs = minhash_frames(docs, k, num_hashes)[1].localCheckpoint(
+        eager=False)
     candidates = _lsh_candidates(sigs, num_hashes, bands)
     a = sigs.alias("a")
     b = sigs.alias("b")

@@ -392,25 +392,28 @@ class TestEmbeddingDecontaminationLsh:
 class TestBenchScopedCpu:
     def test_scoped_measure_attributes_jobs_and_cpu(self, spark):
         """The round-13 bench core: job-group-scoped measurement
-        reports ran_jobs for an action, no jobs for a lazy build, and
-        a positive scoped CPU that includes executor task time."""
+        counts the tasks of an action, no tasks for a lazy build, and
+        a positive scoped CPU that includes executor task time. The
+        py4j status-store path must exist: construction raises
+        without it."""
         import bench
 
         scoped = bench._ScopedCpu(spark)
-        assert scoped.scoped  # the py4j status-store path must exist
 
         def run_job():
             return spark.range(2_000_000).selectExpr(
                 "id % 13 AS k").groupBy("k").count().collect()
 
-        wall, cpu, ran_jobs, ext_frac, rows = scoped.measure(run_job)
-        assert ran_jobs and len(rows) == 13
+        wall, cpu, tasks, ext_frac, rows = scoped.measure(run_job)
+        assert tasks > 0 and len(rows) == 13
         assert wall > 0 and cpu > 0
         assert 0.0 <= ext_frac
+        # the same action again runs the same tasks
+        assert scoped.measure(run_job)[2] == tasks
         # a purely-lazy construction runs no jobs and bills ~no CPU
-        w2, c2, ran2, _, df = scoped.measure(
+        w2, c2, tasks2, _, df = scoped.measure(
             lambda: spark.range(10).selectExpr("id * 2 AS v"))
-        assert not ran2
+        assert tasks2 == 0
         assert c2 < cpu
 
     def test_machine_busy_clock_monotone(self):

@@ -1270,6 +1270,22 @@ def test_quantile_regression_validates(spark):
         ops.quantile_regression_train(empty, ["x"], "y")
 
 
+def test_quantile_regression_fails_on_an_unparseable_string_target(spark):
+    # the target is cast to DOUBLE before the NULL filter; under ANSI
+    # mode (the session default) an unparseable string fails the fit
+    # instead of casting to NULL and silently dropping the row
+    assert spark.conf.get("spark.sql.ansi.enabled") == "true"
+    df = spark.createDataFrame(
+        [(1, 1.0, "2.5"), (2, 2.0, "abc"), (3, 3.0, None)],
+        "id long, x double, y string")
+    with pytest.raises(Exception, match="CAST_INVALID_INPUT"):
+        ops.quantile_regression_train(df, ["x"], "y", iterations=2)
+    # NULL targets are still dropped: without the bad row the fit runs
+    w = ops.quantile_regression_train(df.where("id != 2"), ["x"], "y",
+                                      iterations=2)
+    assert len(w) == 2
+
+
 # ---- c2st_drift (round-8 wave 4) ------------------------------------------------
 
 
