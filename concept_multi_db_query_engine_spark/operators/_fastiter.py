@@ -1,62 +1,63 @@
-"""Driver-side model-fit loop tuning.
+"""The fit session: where driver-side model-fit loops plan their iterations.
 
-A full-batch GD / fixed-point training loop issues one tiny Spark query
-per iteration: a global aggregate over a pinned (localCheckpoint'd)
-feature frame — map-side partial aggregation, ONE exchange to a single
-final partition, a handful of output scalars. For that shape, Adaptive
-Query Execution has nothing to optimize — there is no join to re-plan
-and the final stage is one partition by construction — but its
-query-stage materialization turns every iteration into TWO driver jobs
-(the partial-agg stage materializes as its own job before the final
-stage runs). Measured on the 24-iteration logistic trainer at sf0.1:
-2 jobs/73 single-task stages per fit with AQE on, half that with it
-off; wall 18.8 s → 11.5 s (co-tenant machine), weights bit-identical
-(AQE is a physical-plan-only feature; it cannot change values).
+The fit loops (the GD trainers in ``classify``, the k-means/IVF and fused
+PQ Lloyd loops in ``clustering``) run one small query per iteration over a
+pinned frame. AQE has nothing to re-plan there, but it runs each query
+stage as its own job, and under AQE ``localCheckpoint(eager=False)`` runs
+the frame's shuffle stages when it is called (with AQE off it runs only
+the plan's broadcasts, see ``clustering._fit_loop``). With AQE off
+(4-vCPU VM), ``embeddings_kmeans`` at sf0.01 runs 7 jobs instead of 15
+and ``embeddings_pq_encode`` 5 instead of 10, ``orders_quantile_regression``
+at sf0.1 20 instead of 36; ``docs_quality_logistic`` runs 28 either way.
+Values are identical: AQE changes only the physical plan.
 
-The effect is scale-INDEPENDENT: at any corpus size the per-iteration
-plan is still scan → partial agg → 1-partition final agg, so skipping
-AQE's per-iteration stage materialization saves a fixed driver cost per
-iteration without touching the distributed work. Everything outside the
-loop (featurization, checkpoint, scoring) keeps the session's AQE
-setting.
+The loops must not get there by writing the caller's conf: the session is
+shared, and every query planned meanwhile would run under the loop's conf.
+Each caller session gets one clone (``cloneSession``: the caller's runtime
+conf, temp views and functions; the same SparkContext) that differs only in
+``FIT_CONF``. It is made once, under a lock, and its conf is never written
+again, so it keeps the caller's conf as of its first use. A loop rebinds
+(:func:`rebind`) its pinned inputs into it and every frame it returns back
+to the caller. One shuffle partition serves every
+loop: the k-means and PQ exchanges carry at most k·d (m·k·d) rows at any
+corpus size, and a GD iteration's aggregate is global.
 """
 
 from __future__ import annotations
 
-from contextlib import contextmanager
+import threading
+import weakref
+
+from pyspark.sql import DataFrame, SparkSession
+
+FIT_CONF = {
+    "spark.sql.adaptive.enabled": "false",
+    "spark.sql.shuffle.partitions": "1",
+}
+
+_lock = threading.Lock()
+_fit_sessions: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
-@contextmanager
-def model_fit_iterations(spark, shuffle_partitions: int | None = None):
-    """Disable AQE for the duration of a driver-side fit loop, restoring
-    the caller's setting on exit (exception-safe).
+def fit_session(spark: SparkSession) -> SparkSession:
+    """The fit session of ``spark``, created on first use."""
+    with _lock:
+        fit = _fit_sessions.get(spark)
+        if fit is None:
+            fit = SparkSession(
+                spark.sparkContext, spark._jsparkSession.cloneSession(),
+                FIT_CONF,
+            )
+            _fit_sessions[spark] = fit
+    return fit
 
-    ``shuffle_partitions``: optional reduce-side partition count for the
-    loop's exchanges.  Only pass it when the loop's shuffled frames are
-    MODEL-sized by construction (k centroids, k·d dimension sums — never
-    corpus-sized at any scale): with AQE off the session default would
-    spray those few rows over dozens of near-empty reduce tasks, paying
-    the per-task floor each iteration.  Map-side parallelism (scans,
-    partial aggregation) is unaffected — this bounds only where the
-    already-tiny reduce rows land.  Values cannot move: partitioning
-    never changes exact integer aggregates."""
-    key = "spark.sql.adaptive.enabled"
-    pkey = "spark.sql.shuffle.partitions"
-    old = spark.conf.get(key, "true")
-    # conf.get(pkey) with no default returns the session's EFFECTIVE value
-    # (falling back to the 200 default) even when never explicitly set;
-    # conf.get(pkey, None) returns None in that case, which previously
-    # skipped the restore and leaked partitions=1 session-wide.
-    old_p = spark.conf.get(pkey) if shuffle_partitions else None
-    spark.conf.set(key, "false")
-    if shuffle_partitions:
-        spark.conf.set(pkey, str(shuffle_partitions))
-    try:
-        yield
-    finally:
-        spark.conf.set(key, old)
-        if shuffle_partitions:
-            if old_p is not None:
-                spark.conf.set(pkey, old_p)
-            else:
-                spark.conf.unset(pkey)
+
+def rebind(df: DataFrame, spark: SparkSession) -> DataFrame:
+    """``df``'s analysed plan as a frame of ``spark``. A pinned frame's
+    plan is a scan of its stored blocks, so nothing is recomputed."""
+    if df.sparkSession is spark:
+        return df
+    dataset = getattr(spark._jvm, "org.apache.spark.sql.classic.Dataset")
+    return DataFrame(
+        dataset.ofRows(spark._jsparkSession, df._jdf.logicalPlan()), spark
+    )

@@ -122,41 +122,38 @@ def logistic_train(
     n_rows = pinned.count()
     if n_rows == 0:
         raise ValueError("logistic_train: no usable rows")
-    base = loop_width(pinned, n_rows)
-    w = [0.0] * (d + 1)
-    # AQE off for the loop only: each iteration is a fixed-shape global
-    # aggregate (one exchange, one final partition) where AQE's
-    # query-stage materialization just doubles the per-iteration driver
-    # jobs — see _fastiter for the measurement; values are unaffected.
-    from ._fastiter import model_fit_iterations
+    # the iterations are planned in the fit session (_fastiter): a
+    # fixed-shape global aggregate per iteration, values unaffected
+    from ._fastiter import fit_session, rebind
 
-    with model_fit_iterations(df.sparkSession):
-        for _ in range(iterations):
-            z = _dot_sql(w, cols)
-            resid = f"(__y - {_sigmoid_sql(z)})"
-            # residual computed ONCE per row, then short quantized sums —
-            # keeps plan size linear in d instead of d × |fold| (and is
-            # the exact shape the SQL oracle replays)
-            staged = base.select(F.expr(resid).alias("__r"), *cols)
-            aggs = [F.count(F.lit(1)).cast("long").alias("n")]
+    base = rebind(loop_width(pinned, n_rows), fit_session(df.sparkSession))
+    w = [0.0] * (d + 1)
+    for _ in range(iterations):
+        z = _dot_sql(w, cols)
+        resid = f"(__y - {_sigmoid_sql(z)})"
+        # residual computed ONCE per row, then short quantized sums —
+        # keeps plan size linear in d instead of d × |fold| (and is
+        # the exact shape the SQL oracle replays)
+        staged = base.select(F.expr(resid).alias("__r"), *cols)
+        aggs = [F.count(F.lit(1)).cast("long").alias("n")]
+        aggs.append(
+            F.expr(f"sum(CAST(round(__r * {_Q}.0d) AS BIGINT))")
+            .alias("s0")
+        )
+        for j in range(1, len(feature_exprs) + 1):
             aggs.append(
-                F.expr(f"sum(CAST(round(__r * {_Q}.0d) AS BIGINT))")
-                .alias("s0")
+                F.expr(
+                    f"sum(CAST(round((__r * __f{j}) * {_Q}.0d) "
+                    f"AS BIGINT))"
+                ).alias(f"s{j}")
             )
-            for j in range(1, len(feature_exprs) + 1):
-                aggs.append(
-                    F.expr(
-                        f"sum(CAST(round((__r * __f{j}) * {_Q}.0d) "
-                        f"AS BIGINT))"
-                    ).alias(f"s{j}")
-                )
-            row = staged.agg(*aggs).collect()[0]
-            n = int(row["n"])
-            if n == 0:
-                raise ValueError("logistic_train: no usable rows")
-            for j in range(len(w)):
-                sj = int(row[f"s{j}"])
-                w[j] = w[j] + lr * ((sj / float(_Q)) / n)
+        row = staged.agg(*aggs).collect()[0]
+        n = int(row["n"])
+        if n == 0:
+            raise ValueError("logistic_train: no usable rows")
+        for j in range(len(w)):
+            sj = int(row[f"s{j}"])
+            w[j] = w[j] + lr * ((sj / float(_Q)) / n)
     mat.unpersist()
     return w
 
@@ -403,38 +400,36 @@ def quantile_regression_train(
     n_rows = pinned.count()
     if n_rows == 0:
         raise ValueError("quantile_regression_train: no usable rows")
-    base = loop_width(pinned, n_rows)
-    w = [0.0] * (len(feature_exprs) + 1)
-    # AQE off for the loop only (the logistic_train rationale — see
-    # _fastiter): fixed-shape per-iteration aggregate, values unaffected.
-    from ._fastiter import model_fit_iterations
+    # planned in the fit session (the logistic_train rationale)
+    from ._fastiter import fit_session, rebind
 
-    with model_fit_iterations(df.sparkSession):
-        for _ in range(iterations):
-            z = _dot_sql(w, cols)
-            grad = (
-                f"(CAST({tau!r} AS DOUBLE) - CASE WHEN "
-                f"__t < {z} THEN 1.0d "
-                "ELSE 0.0d END)"
-            )
-            staged = base.select(F.expr(grad).alias("__g"), *cols)
-            aggs = [F.count(F.lit(1)).cast("long").alias("n")]
+    base = rebind(loop_width(pinned, n_rows), fit_session(df.sparkSession))
+    w = [0.0] * (len(feature_exprs) + 1)
+    for _ in range(iterations):
+        z = _dot_sql(w, cols)
+        grad = (
+            f"(CAST({tau!r} AS DOUBLE) - CASE WHEN "
+            f"__t < {z} THEN 1.0d "
+            "ELSE 0.0d END)"
+        )
+        staged = base.select(F.expr(grad).alias("__g"), *cols)
+        aggs = [F.count(F.lit(1)).cast("long").alias("n")]
+        aggs.append(
+            F.expr(f"sum(CAST(round(__g * {_Q}.0d) AS BIGINT))")
+            .alias("s0"))
+        for j in range(1, len(feature_exprs) + 1):
             aggs.append(
-                F.expr(f"sum(CAST(round(__g * {_Q}.0d) AS BIGINT))")
-                .alias("s0"))
-            for j in range(1, len(feature_exprs) + 1):
-                aggs.append(
-                    F.expr(
-                        f"sum(CAST(round((__g * __f{j}) * {_Q}.0d) "
-                        "AS BIGINT))"
-                    ).alias(f"s{j}"))
-            row = staged.agg(*aggs).collect()[0]
-            n = int(row["n"])
-            if n == 0:
-                raise ValueError(
-                    "quantile_regression_train: no usable rows")
-            for j in range(len(w)):
-                w[j] = w[j] + lr * ((int(row[f"s{j}"]) / float(_Q)) / n)
+                F.expr(
+                    f"sum(CAST(round((__g * __f{j}) * {_Q}.0d) "
+                    "AS BIGINT))"
+                ).alias(f"s{j}"))
+        row = staged.agg(*aggs).collect()[0]
+        n = int(row["n"])
+        if n == 0:
+            raise ValueError(
+                "quantile_regression_train: no usable rows")
+        for j in range(len(w)):
+            w[j] = w[j] + lr * ((int(row[f"s{j}"]) / float(_Q)) / n)
     mat.unpersist()
     return w
 

@@ -55,6 +55,41 @@ def _quantize(vec_col: str):
     )
 
 
+def _quantized_pin(
+    embeddings: DataFrame, id_col: str, vec_col: str
+) -> DataFrame:
+    """The fits' quantized pin: (vid, q) with the FULL vector quantized
+    once and ``localCheckpoint``-pinned — the loops re-read it every
+    iteration.  For PQ one parquet scan and one driver barrier feed
+    every subspace, where the old shape paid one scan + one eager pin
+    PER subspace.  Quantization is elementwise, so
+    ``slice(quantize(v)) == quantize(slice(v))`` and every downstream
+    value is bit-identical to the per-slice path."""
+    return embeddings.select(
+        F.col(id_col).alias("vid"), _quantize(vec_col).alias("q")
+    ).localCheckpoint(eager=True)
+
+
+def _seed_centroids(emb: DataFrame, k: int) -> DataFrame:
+    """The k seed centroids (cid, cq) of a (vid, q) frame: global
+    bottom-k by id (planned as TakeOrderedAndProject — a TopK, not a
+    full sort), then cid 0..k-1 by id order via a sorted-array
+    posexplode of the k-row frame — the same ranking a global
+    row_number window would give, without the single-partition
+    WindowExec."""
+    return (
+        emb.orderBy("vid")
+        .limit(k)
+        .groupBy()
+        .agg(F.array_sort(F.collect_list(F.struct("vid", "q"))).alias("a"))
+        .select(F.posexplode("a").alias("cid", "t"))
+        .select(
+            F.col("cid").cast("long").alias("cid"),
+            F.col("t.q").alias("cq"),
+        )
+    )
+
+
 def _assign_frame(emb: DataFrame, cent_frame: DataFrame) -> DataFrame:
     """Nearest-centroid assignment of a quantized (vid, q) frame under a
     (cid, cq) centroid frame: centroids pack into ONE broadcast row and
@@ -91,60 +126,45 @@ def _assign_frame(emb: DataFrame, cent_frame: DataFrame) -> DataFrame:
 
 def _fit_loop(emb: DataFrame, k: int, iterations: int) -> DataFrame:
     """Lloyd training loop over a checkpointed quantized frame; returns
-    the final (cid, cq) centroid frame.
+    the final (cid, cq) centroid frame, bound to ``emb``'s session.
 
-    The per-iteration ``localCheckpoint`` (needed: ``cents`` is
-    referenced twice per iteration, so an uncut lineage grows
-    exponentially) resolves the plan to an RDD, which kicks off the
-    iteration's broadcast/shuffle-stage jobs at BUILD time; running the
-    loop under :func:`._fastiter.model_fit_iterations` (AQE off for the
-    loop only — physical-plan-only, values identical) halves those
-    per-iteration driver jobs, the same fixed per-iteration cost the GD
-    trainers shed.  The centroid frames are k rows, so nothing here
-    depends on a runtime size estimate."""
-    from ._fastiter import model_fit_iterations
-    # k seed centroids: global bottom-k by id (planned as
-    # TakeOrderedAndProject — a TopK, not a full sort), then cid 0..k-1
-    # by id order via a sorted-array posexplode of the k-row frame — the
-    # same ranking a global row_number window would give, without the
-    # single-partition WindowExec.
-    cents = (
-        emb.orderBy("vid")
-        .limit(k)
-        .groupBy()
-        .agg(F.array_sort(F.collect_list(F.struct("vid", "q"))).alias("a"))
-        .select(F.posexplode("a").alias("cid", "t"))
-        .select(
-            F.col("cid").cast("long").alias("cid"),
-            F.col("t.q").alias("cq"),
+    The loop is planned in the fit session (:mod:`._fastiter`: AQE off,
+    one shuffle partition — physical-plan-only, values identical).  The
+    per-iteration ``localCheckpoint`` is needed: ``cents`` is referenced
+    twice per iteration, so an uncut lineage grows exponentially.  It
+    is not lazy here either: with AQE off, ``eager=False`` runs the
+    plan's broadcasts when it is called — the centroid row the
+    assignment reads, and the k-row new-centroid side of the left join,
+    whose job runs the iteration's shuffles — 2 jobs and 4 stages an
+    iteration at sf0.01, against 4-5 jobs and 7-9 stages under AQE,
+    which runs every query stage as its own job.  The centroid frames
+    are k rows, so nothing here depends on a runtime size estimate."""
+    from ._fastiter import fit_session, rebind
+
+    caller = emb.sparkSession
+    emb = rebind(emb, fit_session(caller))
+    cents = _seed_centroids(emb, k)
+    for _ in range(iterations):
+        assigned = _assign_frame(emb, cents)
+        dim_sums = (
+            assigned.select(
+                "cid", F.posexplode("q").alias("pos", "val")
+            )
+            .groupBy("cid", "pos")
+            .agg(F.sum("val").alias("s"), F.count(F.lit(1)).alias("c"))
         )
-    )
-    # shuffle_partitions=1: every in-loop exchange carries at most k·d
-    # rows (dimension sums / centroid joins) regardless of corpus size —
-    # the corpus-side work is map-side partial aggregation at scan
-    # parallelism, which this does not touch
-    with model_fit_iterations(emb.sparkSession, shuffle_partitions=1):
-        for _ in range(iterations):
-            assigned = _assign_frame(emb, cents)
-            dim_sums = (
-                assigned.select(
-                    "cid", F.posexplode("q").alias("pos", "val")
-                )
-                .groupBy("cid", "pos")
-                .agg(F.sum("val").alias("s"), F.count(F.lit(1)).alias("c"))
-            )
-            new_cents = dim_sums.groupBy("cid").agg(
-                F.expr(
-                    "transform(array_sort(collect_list(struct(pos, s, c))), "
-                    "t -> t.s DIV t.c)"
-                ).alias("ncq")
-            )
-            cents = (
-                cents.join(new_cents, "cid", "left")
-                .select("cid", F.coalesce("ncq", "cq").alias("cq"))
-                .localCheckpoint(eager=False)
-            )
-    return cents
+        new_cents = dim_sums.groupBy("cid").agg(
+            F.expr(
+                "transform(array_sort(collect_list(struct(pos, s, c))), "
+                "t -> t.s DIV t.c)"
+            ).alias("ncq")
+        )
+        cents = (
+            cents.join(new_cents, "cid", "left")
+            .select("cid", F.coalesce("ncq", "cq").alias("cq"))
+            .localCheckpoint(eager=False)
+        )
+    return rebind(cents, caller)
 
 
 def kmeans_fit(
@@ -160,9 +180,7 @@ def kmeans_fit(
     recurrence, and determinism contract as :func:`kmeans_assign`."""
     if k < 1 or iterations < 0:
         raise ValueError("need k >= 1 and iterations >= 0")
-    emb = embeddings.select(
-        F.col(id_col).alias("vid"), _quantize(vec_col).alias("q")
-    ).localCheckpoint(eager=True)
+    emb = _quantized_pin(embeddings, id_col, vec_col)
     return _fit_loop(emb, k, iterations)
 
 
@@ -208,9 +226,7 @@ def kmeans_assign(
     """
     if k < 1 or iterations < 0:
         raise ValueError("need k >= 1 and iterations >= 0")
-    emb = embeddings.select(
-        F.col(id_col).alias("vid"), _quantize(vec_col).alias("q")
-    ).localCheckpoint(eager=True)
+    emb = _quantized_pin(embeddings, id_col, vec_col)
     cents = _fit_loop(emb, k, iterations)
     return _assign_frame(emb, cents).select(
         F.col("vid").alias(id_col),
@@ -241,20 +257,6 @@ def kmeans_centroids(
     )
 
 
-def _pq_pin(
-    embeddings: DataFrame, id_col: str, vec_col: str
-) -> DataFrame:
-    """The PQ family's shared quantized pin: (vid, q) with the FULL
-    vector quantized once and ``localCheckpoint``-pinned — one parquet
-    scan and one driver barrier feed every subspace, where the old
-    shape paid one scan + one eager pin PER subspace.  Quantization is
-    elementwise, so ``slice(quantize(v)) == quantize(slice(v))`` and
-    every downstream value is bit-identical to the per-slice path."""
-    return embeddings.select(
-        F.col(id_col).alias("vid"), _quantize(vec_col).alias("q")
-    ).localCheckpoint(eager=True)
-
-
 def _pq_dist2(q_expr: str, cq_expr: str) -> str:
     """Exact integer squared distance between two quantized arrays —
     the one fold every PQ path shares."""
@@ -281,86 +283,76 @@ def _pq_fit_all(
     each of those PER SUBSPACE (m× the driver jobs for the same work).
     The seed rows (bottom-k by vid) do not depend on the vector values
     at all, so they too are computed once and sliced per subspace.
-    Runs under the AQE-off / 1-partition-shuffle fit context of
-    :func:`_fit_loop` — in-loop exchanges carry at most m·k·d rows at
-    any corpus scale."""
-    from ._fastiter import model_fit_iterations
+    Planned in the fit session like :func:`_fit_loop` — in-loop
+    exchanges carry at most m·k·d rows at any corpus scale; the
+    codebook frame comes back bound to ``emb_q``'s session."""
+    from ._fastiter import fit_session, rebind
 
+    caller = emb_q.sparkSession
+    emb_q = rebind(emb_q, fit_session(caller))
     sub = dim // m
-    seeds = (
-        emb_q.orderBy("vid")
-        .limit(k)
-        .groupBy()
-        .agg(F.expr("array_sort(collect_list(struct(vid, q)))").alias("a"))
-        .select(F.posexplode("a").alias("cid", "t"))
-        .select(
-            F.col("cid").cast("long").alias("cid"),
-            F.col("t.q").alias("q"),
-        )
-    )
-    cents = seeds.select(
+    cents = _seed_centroids(emb_q, k).select(
         "cid",
         F.explode(
             F.expr(
                 f"transform(sequence(0, {m - 1}), s -> struct("
                 f"CAST(s AS INT) AS s, "
-                f"slice(q, s * {sub} + 1, {sub}) AS cq))"
+                f"slice(cq, s * {sub} + 1, {sub}) AS cq))"
             )
         ).alias("sc"),
     ).select(F.col("sc.s").alias("s"), "cid", F.col("sc.cq").alias("cq"))
-    with model_fit_iterations(emb_q.sparkSession, shuffle_partitions=1):
-        for _ in range(iterations):
-            one = cents.groupBy().agg(
-                F.expr("array_sort(collect_list(struct(s, cid, cq)))")
-                .alias("css")
+    for _ in range(iterations):
+        one = cents.groupBy().agg(
+            F.expr("array_sort(collect_list(struct(s, cid, cq)))")
+            .alias("css")
+        )
+        assigned = (
+            emb_q.join(F.broadcast(one))
+            .select(
+                "q",
+                F.explode(
+                    F.expr(
+                        f"transform(sequence(0, {m - 1}), s -> struct("
+                        "CAST(s AS INT) AS s, "
+                        "array_min(transform(filter(css, c -> c.s = s),"
+                        " c -> struct("
+                        + _pq_dist2(f"slice(q, s * {sub} + 1, {sub})",
+                                    "c.cq")
+                        + " AS dist2, c.cid AS cid))).cid AS cid))"
+                    )
+                ).alias("sa"),
             )
-            assigned = (
-                emb_q.join(F.broadcast(one))
-                .select(
-                    "q",
-                    F.explode(
-                        F.expr(
-                            f"transform(sequence(0, {m - 1}), s -> struct("
-                            "CAST(s AS INT) AS s, "
-                            "array_min(transform(filter(css, c -> c.s = s),"
-                            " c -> struct("
-                            + _pq_dist2(f"slice(q, s * {sub} + 1, {sub})",
-                                        "c.cq")
-                            + " AS dist2, c.cid AS cid))).cid AS cid))"
-                        )
-                    ).alias("sa"),
-                )
-                .select(
-                    F.col("sa.s").alias("s"),
-                    F.col("sa.cid").alias("cid"),
-                    "q",
-                )
+            .select(
+                F.col("sa.s").alias("s"),
+                F.col("sa.cid").alias("cid"),
+                "q",
             )
-            dim_sums = (
-                assigned.select(
-                    "s", "cid",
-                    F.posexplode(
-                        F.expr(f"slice(q, s * {sub} + 1, {sub})")
-                    ).alias("pos", "val"),
-                )
-                .groupBy("s", "cid", "pos")
-                .agg(
-                    F.sum("val").alias("sm"),
-                    F.count(F.lit(1)).alias("c"),
-                )
+        )
+        dim_sums = (
+            assigned.select(
+                "s", "cid",
+                F.posexplode(
+                    F.expr(f"slice(q, s * {sub} + 1, {sub})")
+                ).alias("pos", "val"),
             )
-            new_cents = dim_sums.groupBy("s", "cid").agg(
-                F.expr(
-                    "transform(array_sort(collect_list(struct(pos, sm, c))),"
-                    " t -> t.sm DIV t.c)"
-                ).alias("ncq")
+            .groupBy("s", "cid", "pos")
+            .agg(
+                F.sum("val").alias("sm"),
+                F.count(F.lit(1)).alias("c"),
             )
-            cents = (
-                cents.join(new_cents, ["s", "cid"], "left")
-                .select("s", "cid", F.coalesce("ncq", "cq").alias("cq"))
-                .localCheckpoint(eager=False)
-            )
-    return cents
+        )
+        new_cents = dim_sums.groupBy("s", "cid").agg(
+            F.expr(
+                "transform(array_sort(collect_list(struct(pos, sm, c))),"
+                " t -> t.sm DIV t.c)"
+            ).alias("ncq")
+        )
+        cents = (
+            cents.join(new_cents, ["s", "cid"], "left")
+            .select("s", "cid", F.coalesce("ncq", "cq").alias("cq"))
+            .localCheckpoint(eager=False)
+        )
+    return rebind(cents, caller)
 
 
 def _pq_assign_all(
@@ -480,7 +472,7 @@ def pq_encode(
     vector index).
 
     Scale shape: the corpus is scanned ONCE and quantized into a
-    shared pin (:func:`_pq_pin`); the m codebooks fit over lazy slice
+    shared pin (:func:`_quantized_pin`); the m codebooks fit over lazy slice
     (:func:`_pq_fit_all` — ONE fused Lloyd loop: one codebook
     broadcast + one m·k·d-row shuffle per iteration for ALL m
     subspaces), and encoding is a SINGLE narrow map
@@ -496,7 +488,7 @@ def pq_encode(
     """
     if dim % m != 0:
         raise ValueError(f"dim {dim} not divisible by m {m}")
-    emb_q = _pq_pin(embeddings, id_col, vec_col)
+    emb_q = _quantized_pin(embeddings, id_col, vec_col)
     cents = _pq_fit_all(emb_q, dim, m, k, iterations)
     enc = _pq_assign_all(emb_q, cents, dim, m)
     err = None
@@ -530,7 +522,7 @@ def pq_topk(
     the original vectors.
 
     Scale shape: the corpus is scanned ONCE into the shared quantized
-    pin (:func:`_pq_pin`); the m codebooks fit in ONE fused Lloyd loop
+    pin (:func:`_quantized_pin`); the m codebooks fit in ONE fused Lloyd loop
     (:func:`_pq_fit_all`), the (vid, subspace, code) frame is
     ONE narrow pass over the pin (all m broadcast argmins at once, then
     a narrow posexplode — no per-subspace corpus scan, no m-way union);
@@ -551,7 +543,7 @@ def pq_topk(
     # the query frame keys by query_id_col when present (a frame keyed
     # "query_id" must not be read through the corpus' id_col)
     q_in = query_id_col if query_id_col in queries.columns else id_col
-    emb_q = _pq_pin(embeddings, id_col, vec_col)
+    emb_q = _quantized_pin(embeddings, id_col, vec_col)
     cents = _pq_fit_all(emb_q, dim, m, k, iterations)
     # inline ADC: one code ARRAY per vid crossed with the broadcast
     # per-query table MAP, the m lookups summed in a codegen fold — no
@@ -698,7 +690,7 @@ def ivf_pq_topk(
 
     Scale shape, piece by piece:
     * ONE corpus scan feeds everything: the shared quantized pin
-      (:func:`_pq_pin`) seeds the coarse fit, the corpus cell
+      (:func:`_quantized_pin`) seeds the coarse fit, the corpus cell
       assignment, the m per-subspace codebook fits (ONE fused Lloyd loop,
       :func:`_pq_fit_all`), and the code frame — the old shape paid a
       parquet scan + eager pin per subspace plus two more for the
@@ -727,7 +719,7 @@ def ivf_pq_topk(
     # "query_id" must not be read through the corpus' id_col)
     q_in = query_id_col if query_id_col in queries.columns else id_col
     # coarse quantizer: train + encode the corpus off the shared pin
-    emb_q = _pq_pin(embeddings, id_col, vec_col)
+    emb_q = _quantized_pin(embeddings, id_col, vec_col)
     coarse = _fit_loop(emb_q, n_cells, iterations).localCheckpoint(
         eager=True
     )

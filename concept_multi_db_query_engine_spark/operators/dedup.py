@@ -720,68 +720,30 @@ def duplicate_clusters(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
     component (the canonical survivor under keep-lowest-id policy).
 
     Input: (d1, d2[, ...]) undirected edges. Output: (doc_id, cluster_id)
-    for every node that appears in an edge (singletons never enter pairs).
+    for every node that appears in a pair, a self-pair (d, d) included
+    (singletons never enter pairs).
 
-    The loop is the standard large-scale connected-components shape
-    (GraphX/GraphFrames use the same): each round, every node takes the min
-    label among itself and its neighbors; rounds needed = graph diameter
-    (near-dup clusters are shallow — a handful). Each round is one shuffle
-    on node id; at petabyte scale, localCheckpoint every few rounds truncates
-    the growing lineage.
+    The loop is ``graph.connected_components``' (GraphX/GraphFrames use
+    the same shape): each round, every node takes the min label among
+    itself and its neighbors; rounds needed = graph diameter (near-dup
+    clusters are shallow — a handful). If labels still change after
+    ``max_iter`` rounds it raises ``ValueError`` rather than return
+    silently split clusters.
     """
-    edges = pairs.select("d1", "d2")
+    from .graph import _min_label_components
+
+    edges = pairs.select(F.col("d1").alias("u"), F.col("d2").alias("w"))
     # PIN the edge frame before looping: every propagation round joins
     # `sym`, and without a checkpoint each round re-evaluates the FULL
     # upstream pair pipeline (for semantic pairs that is the clustering
     # + pair join — measured 33 s vs 4 s at sf0.1 for the survivors
-    # composition, and unboundedly worse at 100 TB). One eager
-    # materialization, every round after reads the stored blocks —
-    # the graph.connected_components discipline. Caveat: localCheckpoint
-    # data is non-replicated executor-local storage; on a real cluster,
-    # executor loss mid-loop loses the pinned partitions — for multi-hour
-    # 100 TB runs swap in persist(DISK_ONLY_2) or a reliable checkpoint
-    # dir (the loop itself is storage-agnostic).
+    # composition). localCheckpoint blocks are executor-local; for
+    # multi-hour cluster runs swap in persist(DISK_ONLY_2).
     sym = edges.union(
-        edges.select(F.col("d2").alias("d1"), F.col("d1").alias("d2"))
+        edges.select(F.col("w").alias("u"), F.col("u").alias("w"))
     ).localCheckpoint(eager=True)
-    labels = (
-        sym.select(F.col("d1").alias("node")).distinct()
-        .withColumn("label", F.col("node"))
-    )
-    for i in range(max_iter):
-        neighbor_min = (
-            sym.join(labels, sym["d2"] == labels["node"])
-            .groupBy(F.col("d1").alias("node"))
-            .agg(F.min("label").alias("nmin"))
-        )
-        new_labels = (
-            labels.join(neighbor_min, "node", "left")
-            .select(
-                "node",
-                F.least(F.col("label"), F.coalesce("nmin", "label"))
-                .alias("label"),
-            )
-        )
-        if i % 3 == 2:
-            # truncate lineage: the plan doubles in depth every round
-            new_labels = new_labels.localCheckpoint()
-        if i == 0 or i % 2 == 1:
-            # any non-trivial component needs >=2 rounds, and each probe is
-            # a driver-side job — check convergence only every other round
-            # (worst case: one extra no-op propagation round, which is
-            # cheaper than a probe per round)
-            labels = new_labels
-            continue
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "node")
-            .where(F.col("n.label") != F.col("o.label"))
-            .limit(1)
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
+    nodes = sym.select(F.col("u").alias("node")).distinct()
+    labels = _min_label_components(sym, nodes, max_iter, "max_iter")
     return labels.select(
         F.col("node").alias("doc_id"), F.col("label").alias("cluster_id")
     )

@@ -28,7 +28,6 @@ def pagerank(
     damping_pct: int = 85,
     src_col: str = "src",
     dst_col: str = "dst",
-    checkpoint_every: int = 2,
     redistribute_dangling: bool = False,
 ) -> DataFrame:
     """Integer fixed-point PageRank over a directed edge list. Returns
@@ -46,11 +45,10 @@ def pagerank(
     that), one map-side-combined LONG sum keyed by ``dst`` (exact and
     associative — this is why integer units matter), and a left join back
     to the node universe so sink-only nodes keep their base rank. Lineage
-    is cut with ``localCheckpoint`` every ``checkpoint_every`` rounds
-    (default 2 — the dominant loop cost locally is driver-side Catalyst
-    re-analysis of the growing plan, which the cadence bounds; the same
-    discipline as ``duplicate_clusters``); per-iteration state
-    is one row per node, never per edge. The node count is the single
+    is cut with ``localCheckpoint`` every 2 rounds (the dominant loop cost
+    locally is driver-side Catalyst re-analysis of the growing plan, which
+    the cadence bounds); per-iteration state is one row per node, never
+    per edge. The node count is the single
     driver-side scalar (one tiny count job) that seeds the integer base.
 
     Dangling mass: by default, nodes without out-edges simply leak their
@@ -88,7 +86,9 @@ def pagerank(
         .distinct()
         .localCheckpoint(eager=False)
     )
-    n = nodes.count()  # materializes the node checkpoint (reads e0 only)
+    # fills the node checkpoint (reads e0 only); under AQE the call above
+    # already ran the distinct's shuffle stage
+    n = nodes.count()
     if n == 0:
         return nodes.select(
             "node",
@@ -97,11 +97,6 @@ def pagerank(
         )
     init = SCALE // n
     base = init * (100 - damping_pct) // 100
-    out_edges = e0.join(
-        e0.groupBy(F.col("c_src").alias("o_src"))
-        .agg(F.count(F.lit(1)).alias("outdeg")),
-        F.col("c_src") == F.col("o_src"),
-    ).select("c_src", "c_dst", "outdeg")
     dangling = None
     if redistribute_dangling:
         # loop-invariant sink set: nodes that never appear as a source
@@ -110,7 +105,40 @@ def pagerank(
             "node",
             "left_anti",
         ).localCheckpoint(eager=False)
-    ranks = nodes.select("node", F.lit(init).cast("long").alias("rank_i"))
+    return _rank_iterations(
+        e0, nodes, F.lit(init), F.lit(base), iterations, damping_pct,
+        dangling, n,
+    )
+
+
+def _rank_iterations(
+    e0: DataFrame,
+    nodes: DataFrame,
+    start,
+    teleport,
+    iterations: int,
+    damping_pct: int,
+    dangling: DataFrame | None = None,
+    n: int = 0,
+) -> DataFrame:
+    """The integer rank recurrence of :func:`pagerank` and
+    :func:`personalized_pagerank` over the pinned (c_src, c_dst) edge
+    frame ``e0``: ranks start at the ``start`` column, and each round
+
+        rank'(v) = teleport(v) + damping_pct * contrib(v) DIV 100
+
+    with ``contrib(v)`` the in-edge sum of ``rank(u) DIV outdeg(u)``.
+    Given the sink set ``dangling`` and the node count ``n``, the rank
+    held by sinks is shared back to every node before damping. Lineage
+    is cut every 2 rounds; under the session's AQE each cut runs the
+    round's shuffle stages when it is called, not when the result is
+    read. Returns (node, rank_scaled, rank)."""
+    out_edges = e0.join(
+        e0.groupBy(F.col("c_src").alias("o_src"))
+        .agg(F.count(F.lit(1)).alias("outdeg")),
+        F.col("c_src") == F.col("o_src"),
+    ).select("c_src", "c_dst", "outdeg")
+    ranks = nodes.select("node", start.cast("long").alias("rank_i"))
     for it in range(iterations):
         contrib = (
             out_edges.join(ranks, out_edges["c_src"] == ranks["node"])
@@ -121,34 +149,21 @@ def pagerank(
             .groupBy("node")
             .agg(F.sum("c").alias("contrib"))
         )
-        if redistribute_dangling:
+        step = nodes.join(contrib, "node", "left")
+        mass = "coalesce(contrib, 0)"
+        if dangling is not None:
             dmass = ranks.join(dangling, "node").agg(
                 F.coalesce(F.sum("rank_i"), F.lit(0))
                 .cast("long").alias("__dm")
             )
-            ranks = (
-                nodes.join(contrib, "node", "left")
-                .crossJoin(dmass)  # one-row side: broadcast NLJ
-                .select(
-                    "node",
-                    (
-                        F.lit(base)
-                        + F.expr(
-                            f"{damping_pct} * (coalesce(contrib, 0)"
-                            f" + __dm DIV {n}) DIV 100"
-                        )
-                    ).cast("long").alias("rank_i"),
-                )
-            )
-        else:
-            ranks = nodes.join(contrib, "node", "left").select(
-                "node",
-                (
-                    F.lit(base)
-                    + F.expr(f"{damping_pct} * coalesce(contrib, 0) DIV 100")
-                ).cast("long").alias("rank_i"),
-            )
-        if checkpoint_every and (it + 1) % checkpoint_every == 0:
+            step = step.crossJoin(dmass)  # one-row side: broadcast NLJ
+            mass = f"(coalesce(contrib, 0) + __dm DIV {n})"
+        ranks = step.select(
+            "node",
+            (teleport + F.expr(f"{damping_pct} * {mass} DIV 100"))
+            .cast("long").alias("rank_i"),
+        )
+        if it % 2 == 1:
             ranks = ranks.localCheckpoint(eager=False)
     return ranks.select(
         "node",
@@ -162,7 +177,6 @@ def hits_scores(
     iterations: int = 8,
     src_col: str = "src",
     dst_col: str = "dst",
-    checkpoint_every: int = 1,
 ) -> DataFrame:
     """Integer fixed-point HITS (Kleinberg 1999): mutually-reinforcing
     hub and authority scores over a directed edge list — on a kNN
@@ -196,11 +210,10 @@ def hits_scores(
     authority joins, each followed by a map-side-combined LONG sum) and
     two ONE-ROW max aggregates joined back by broadcast nested-loop —
     no driver-side action inside the loop; per-iteration state is one
-    row per node. Lineage cut with ``localCheckpoint`` every
-    ``checkpoint_every`` rounds (the :func:`pagerank` discipline);
-    default 1 — with TWO state frames per round the cut must land
-    between the auth and hub half-steps or hub's lineage re-plans and
-    re-computes the auth half-step, and per-round cuts measured
+    row per node. Lineage cut with ``localCheckpoint`` every round,
+    after each half-step: with TWO state frames per round the cut must
+    land between the auth and hub half-steps or hub's lineage re-plans
+    and re-computes the auth half-step, and per-round cuts measured
     fastest (driver planning is the loop's dominant cost at any
     scale; checkpoints are value-neutral).
 
@@ -220,7 +233,6 @@ def hits_scores(
         .localCheckpoint(eager=True)
     )
     hub = nodes.select("node", F.lit(scale).cast("long").alias("hub_i"))
-    auth = None
     # Inside the loop the score frames carry ONLY nodes with incident
     # edges: a node absent from auth/hub contributes exactly what a
     # zero row would (the edge join drops it; the max ignores zeros,
@@ -228,8 +240,7 @@ def hits_scores(
     # per-iteration zero-fill join the spec's formulation implies is
     # deferred to ONE left join at the end — two exchanges per
     # half-step instead of three, 12 fewer stages at 6 iterations.
-    for it in range(iterations):
-        cut = checkpoint_every and (it + 1) % checkpoint_every == 0
+    for _ in range(iterations):
         s_a = (
             e0.join(hub, e0["e_src"] == hub["node"])
             .groupBy(F.col("e_dst").alias("node"))
@@ -242,16 +253,10 @@ def hits_scores(
             "node",
             F.expr(f"s * {scale} DIV __ma").cast("long").alias("auth_i"),
         )
-        # Cut auth BEFORE the hub half-step references it: the old
-        # order (build s_h off the un-cut auth, reassign auth to its
-        # checkpoint afterwards) left hub's lineage holding the FULL
-        # auth sub-plan — the auth half-step was planned and computed
-        # twice per cut round (once for auth's checkpoint RDD, once
-        # inside hub's), and plans fed to the per-round physical
-        # planner doubled in depth.  Checkpoints are value-neutral, so
-        # scores are unchanged.
-        if cut:
-            auth = auth.localCheckpoint(eager=False)
+        # Cut auth BEFORE the hub half-step references it, or hub's
+        # lineage holds the full auth sub-plan and the auth half-step is
+        # planned and computed twice per round.
+        auth = auth.localCheckpoint(eager=False)
         s_h = (
             e0.join(auth, e0["e_dst"] == auth["node"])
             .groupBy(F.col("e_src").alias("node"))
@@ -263,9 +268,7 @@ def hits_scores(
         hub = s_h.crossJoin(m_h).select(
             "node",
             F.expr(f"s * {scale} DIV __mh").cast("long").alias("hub_i"),
-        )
-        if cut:
-            hub = hub.localCheckpoint(eager=False)
+        ).localCheckpoint(eager=False)
     return (
         nodes.join(auth, "node", "left")
         .join(hub, "node", "left")
@@ -363,18 +366,17 @@ def personalized_pagerank(
     damping_pct: int = 85,
     src_col: str = "src",
     dst_col: str = "dst",
-    checkpoint_every: int = 2,
 ) -> DataFrame:
     """Personalized (topic-sensitive) PageRank: the teleport mass
     restarts ONLY onto ``seeds``, so ranks measure proximity to the seed
     set — the similarity-graph expansion primitive ("documents related
     to this cluster") that global :func:`pagerank` can't express.
 
-    Same integer fixed-point recurrence and scale shape as
-    :func:`pagerank` (exact long sums keyed by dst, one rank join per
-    iteration, lineage cut on a cadence); the only changes are the
-    seed-concentrated initial vector and base term, expressed as a
-    bounded ``isin`` over the (small, query-sized) seed list.  Returns
+    The recurrence and scale shape are :func:`pagerank`'s, run by the
+    same loop; the only changes are the seed-concentrated initial vector
+    and base term, expressed as a bounded ``isin`` over the (small,
+    query-sized) seed list.  With every node a seed this is
+    :func:`pagerank` without dangling redistribution.  Returns
     (node, rank_scaled, rank).
     """
     if not seeds:
@@ -396,39 +398,26 @@ def personalized_pagerank(
     init = SCALE // len(seeds)
     base = init * (100 - damping_pct) // 100
     is_seed = F.col("node").isin(list(seeds))
-    out_edges = e0.join(
-        e0.groupBy(F.col("c_src").alias("o_src"))
-        .agg(F.count(F.lit(1)).alias("outdeg")),
-        F.col("c_src") == F.col("o_src"),
-    ).select("c_src", "c_dst", "outdeg")
-    ranks = nodes.select(
-        "node",
-        F.when(is_seed, init).otherwise(0).cast("long").alias("rank_i"),
+    return _rank_iterations(
+        e0, nodes,
+        F.when(is_seed, init).otherwise(0),
+        F.when(is_seed, base).otherwise(0),
+        iterations, damping_pct,
     )
-    for it in range(iterations):
-        contrib = (
-            out_edges.join(ranks, out_edges["c_src"] == ranks["node"])
-            .select(
-                F.col("c_dst").alias("node"),
-                F.expr("rank_i DIV outdeg").alias("c"),
-            )
-            .groupBy("node")
-            .agg(F.sum("c").alias("contrib"))
-        )
-        ranks = nodes.join(contrib, "node", "left").select(
-            "node",
-            (
-                F.when(is_seed, base).otherwise(0)
-                + F.expr(f"{damping_pct} * coalesce(contrib, 0) DIV 100")
-            ).cast("long").alias("rank_i"),
-        )
-        if checkpoint_every and (it + 1) % checkpoint_every == 0:
-            ranks = ranks.localCheckpoint(eager=False)
-    return ranks.select(
-        "node",
-        F.col("rank_i").alias("rank_scaled"),
-        (F.col("rank_i").cast("double") / F.lit(float(SCALE))).alias("rank"),
-    )
+
+
+def _undirected(
+    edges: DataFrame, src_col: str, dst_col: str
+) -> tuple[DataFrame, DataFrame]:
+    """The pinned undirected view (u, w) of an edge list, self-loops and
+    duplicates dropped, and its pinned node set (node)."""
+    src, dst = F.col(src_col), F.col(dst_col)
+    und = edges.select(src.alias("u"), dst.alias("w")).union(
+        edges.select(dst.alias("u"), src.alias("w"))
+    ).where(F.col("u") != F.col("w")).distinct().localCheckpoint(eager=True)
+    nodes = und.select(F.col("u").alias("node")).distinct() \
+        .localCheckpoint(eager=False)
+    return und, nodes
 
 
 def label_propagation(
@@ -436,7 +425,6 @@ def label_propagation(
     iterations: int = 4,
     src_col: str = "src",
     dst_col: str = "dst",
-    checkpoint_every: int = 1,
     resolve_oscillation: bool = True,
 ) -> DataFrame:
     """Synchronous label propagation community detection (Raghavan et
@@ -466,22 +454,17 @@ def label_propagation(
     The edge list is symmetrized once (undirected view) and checkpointed;
     each iteration is one edge-list join against the label vector plus a
     two-level aggregation — (node, label) counts map-side combined, then
-    a ``min_by`` plurality pick — with lineage cut every
-    ``checkpoint_every`` rounds.  Per-iteration state is one row per
-    node.  Isolated-from-update nodes keep their current label via the
-    left join.  Returns (node, label) — equal labels mark one community.
+    a ``min_by`` plurality pick — with lineage cut every round.
+    Per-iteration state is one row per node.  Isolated-from-update
+    nodes keep their current label via the left join.  Returns
+    (node, label) — equal labels mark one community.
     """
     if iterations < 1:
         raise ValueError("iterations must be >= 1")
-    src, dst = F.col(src_col), F.col(dst_col)
-    und = edges.select(src.alias("u"), dst.alias("w")).union(
-        edges.select(dst.alias("u"), src.alias("w"))
-    ).where(F.col("u") != F.col("w")).distinct().localCheckpoint(eager=True)
-    nodes = und.select(F.col("u").alias("node")).distinct() \
-        .localCheckpoint(eager=False)
+    und, nodes = _undirected(edges, src_col, dst_col)
     labels = nodes.select("node", F.col("node").alias("label"))
     prev = labels
-    for it in range(iterations):
+    for _ in range(iterations):
         counts = (
             und.join(labels, und["w"] == labels["node"])
             .select(F.col("u"), F.col("label"))
@@ -496,9 +479,7 @@ def label_propagation(
             .select(
                 "node",
                 F.coalesce("new_label", "label").alias("label"),
-            )
-        if checkpoint_every and (it + 1) % checkpoint_every == 0:
-            labels = labels.localCheckpoint(eager=False)
+            ).localCheckpoint(eager=False)
     if not resolve_oscillation or iterations < 2:
         return labels
     return labels.join(
@@ -737,7 +718,6 @@ def connected_components(
     src_col: str = "src",
     dst_col: str = "dst",
     max_iterations: int = 50,
-    checkpoint_every: int = 2,
 ) -> DataFrame:
     """Connected components by synchronous min-label propagation —
     every node's label converges to the SMALLEST node id reachable
@@ -745,7 +725,8 @@ def connected_components(
     component id (the :func:`label_propagation` determinism contract,
     with min instead of plurality so there is a true fixpoint and no
     oscillation).  The undirected dedup/linkage complement to
-    ``dedup.duplicate_clusters`` for arbitrary edge lists.
+    ``dedup.duplicate_clusters`` for arbitrary edge lists; both run
+    :func:`_min_label_components`.
 
     Each round is one edge-list join against the label vector plus a
     min aggregation; the loop stops when a bounded driver-side count
@@ -755,67 +736,12 @@ def connected_components(
     Kiveris et al.'s hash-min).  If the graph diameter exceeds
     ``max_iterations`` the loop raises LOUDLY instead of returning
     silently-split components (non-convergence is indistinguishable
-    from correct output by inspection).  Lineage is cut every
-    ``checkpoint_every`` rounds.  Returns (node, component) plus
-    component sizes via (node, component, component_size).
+    from correct output by inspection).  Returns (node, component)
+    plus component sizes via (node, component, component_size).
     """
-    src, dst = F.col(src_col), F.col(dst_col)
-    und = edges.select(src.alias("u"), dst.alias("w")).union(
-        edges.select(dst.alias("u"), src.alias("w"))
-    ).where(F.col("u") != F.col("w")).distinct() \
-        .localCheckpoint(eager=True)
-    nodes = und.select(F.col("u").alias("node")).distinct() \
-        .localCheckpoint(eager=False)
-    labels = nodes.select("node", F.col("node").alias("label"))
-    for it in range(max_iterations):
-        nbr_min = (
-            und.join(labels, und["w"] == labels["node"])
-            .groupBy(F.col("u").alias("node"))
-            .agg(F.min("label").alias("nbr_label"))
-        )
-        new_labels = (
-            nodes.join(labels, "node")
-            .join(nbr_min, "node", "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("label"),
-                    F.coalesce("nbr_label", F.col("label")),
-                ).alias("label"),
-            )
-        )
-        if checkpoint_every and (it + 1) % checkpoint_every == 0:
-            new_labels = new_labels.localCheckpoint(eager=True)
-        # convergence probe every OTHER round (the duplicate_clusters
-        # cadence): any non-trivial component needs >= 2 rounds, each
-        # probe is a driver-side job, and one extra no-op propagation
-        # round is cheaper than a probe per round. Labels at the
-        # fixpoint are stable (min-propagation is idempotent), so the
-        # delayed probe cannot change a single label. The LAST round
-        # always probes, so the loud non-convergence raise below keeps
-        # its exact max_iterations semantics.
-        if it % 2 == 0 and it != max_iterations - 1:
-            labels = new_labels
-            continue
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "node")
-            .where(F.col("n.label") != F.col("o.label"))
-            .limit(1)
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    else:
-        raise ValueError(
-            f"connected_components: labels still changing after "
-            f"max_iterations={max_iterations} rounds — graph diameter "
-            "exceeds the iteration budget and components would be "
-            "SILENTLY split into multiple labels; raise max_iterations "
-            "(convergence needs ~diameter rounds) or pre-contract the "
-            "graph (large-star/small-star)."
-        )
+    und, nodes = _undirected(edges, src_col, dst_col)
+    labels = _min_label_components(
+        und, nodes, max_iterations, "max_iterations")
     sizes = labels.groupBy(F.col("label").alias("component")).agg(
         F.count(F.lit(1)).cast("long").alias("component_size")
     )
@@ -823,6 +749,65 @@ def connected_components(
         labels.select("node", F.col("label").alias("component"))
         .join(sizes, "component")
         .select("node", "component", "component_size")
+    )
+
+
+def _min_label_components(
+    und: DataFrame,
+    nodes: DataFrame,
+    max_iterations: int,
+    budget_arg: str,
+) -> DataFrame:
+    """Min-label propagation to its fixpoint over the pinned symmetric
+    edge frame ``und`` (u, w); every ``nodes`` (node) row starts with
+    its own id as label.  Returns (node, label), the label being the
+    smallest id reachable from the node.
+
+    Convergence is probed every OTHER round, on labels pinned eagerly
+    first (so lineage is cut every 2 rounds): any non-trivial component
+    needs >= 2 rounds, each probe is a driver-side job, and one extra
+    no-op propagation round is cheaper than a probe per round.  Labels
+    at the fixpoint are stable (min-propagation is idempotent), so the
+    delayed probe cannot change a single label.  The LAST round always
+    probes, so the loop raises ``ValueError`` naming the caller's
+    ``budget_arg`` when labels still change after ``max_iterations``
+    rounds."""
+    labels = nodes.select("node", F.col("node").alias("label"))
+    for it in range(max_iterations):
+        nbr_min = (
+            und.join(labels, und["w"] == labels["node"])
+            .groupBy(F.col("u").alias("node"))
+            .agg(F.min("label").alias("nbr_label"))
+        )
+        new_labels = labels.join(nbr_min, "node", "left").select(
+            "node",
+            F.least(
+                F.col("label"), F.coalesce("nbr_label", F.col("label"))
+            ).alias("label"),
+        )
+        if it % 2 == 0 and it != max_iterations - 1:
+            labels = new_labels
+            continue
+        new_labels = new_labels.localCheckpoint(eager=True)
+        # a full count, not limit(1): Spark names each limit's codegen
+        # counter from a process-wide sequence, so every limit-1 probe
+        # compiled a new generated class
+        changed = (
+            new_labels.alias("n")
+            .join(labels.alias("o"), "node")
+            .where(F.col("n.label") != F.col("o.label"))
+            .count()
+        )
+        labels = new_labels
+        if changed == 0:
+            return labels
+    raise ValueError(
+        f"labels still changing after {budget_arg}={max_iterations} "
+        "rounds — graph diameter exceeds the iteration budget and "
+        "components would be "
+        "SILENTLY split into multiple labels; raise "
+        f"{budget_arg} (convergence needs ~diameter rounds) or "
+        "pre-contract the graph (large-star/small-star)."
     )
 
 

@@ -305,6 +305,21 @@ class TestGraphAndRetrieval:
         with pytest.raises(ValueError, match="max_iterations"):
             ops.connected_components(df, max_iterations=2)
 
+    def test_duplicate_clusters_raises_on_non_convergence(self, spark):
+        # a 61-node chain needs 60 rounds; after 25 the labels would
+        # split it into 36 clusters
+        pairs = spark.createDataFrame(
+            [(i, i + 1) for i in range(60)], "d1 long, d2 long")
+        with pytest.raises(ValueError, match="max_iter=25 rounds"):
+            ops.duplicate_clusters(pairs, max_iter=25).collect()
+
+    def test_duplicate_clusters_keeps_self_pair_nodes(self, spark):
+        pairs = spark.createDataFrame(
+            [(5, 5), (1, 2), (2, 3)], "d1 long, d2 long")
+        out = {r["doc_id"]: r["cluster_id"]
+               for r in ops.duplicate_clusters(pairs).collect()}
+        assert out == {1: 1, 2: 1, 3: 1, 5: 5}
+
     def test_two_stage_requires_shortlist_ge_k(self, spark):
         df = spark.createDataFrame(
             [(0, [1.0, 0.0])], "vec_id long, embedding array<double>"

@@ -1,7 +1,7 @@
 """Round-15 optimization-round regression tests: the trainer
 checkpoint-barrier restructure (filter-pushdown re-expansion fix), the
-_fastiter shuffle-partitions restore, the known_groups loud-validation
-flag, and the feature_auc degenerate-count contract."""
+known_groups loud-validation flag, and the feature_auc degenerate-count
+contract."""
 
 from __future__ import annotations
 
@@ -9,29 +9,6 @@ import pytest
 
 from concept_multi_db_query_engine_spark import operators as ops
 from concept_multi_db_query_engine_spark.operators import stats
-from concept_multi_db_query_engine_spark.operators._fastiter import (
-    model_fit_iterations,
-)
-
-
-class TestFastiterRestore:
-    def test_shuffle_partitions_restored_when_never_set(self, spark):
-        pkey = "spark.sql.shuffle.partitions"
-        before = spark.conf.get(pkey)  # effective value (maybe default)
-        with model_fit_iterations(spark, shuffle_partitions=1):
-            assert spark.conf.get(pkey) == "1"
-        assert spark.conf.get(pkey) == before
-
-    def test_restore_on_exception(self, spark):
-        pkey = "spark.sql.shuffle.partitions"
-        akey = "spark.sql.adaptive.enabled"
-        before_p = spark.conf.get(pkey)
-        before_a = spark.conf.get(akey)
-        with pytest.raises(RuntimeError):
-            with model_fit_iterations(spark, shuffle_partitions=1):
-                raise RuntimeError("boom")
-        assert spark.conf.get(pkey) == before_p
-        assert spark.conf.get(akey) == before_a
 
 
 class TestTrainerCheckpointBarrier:
